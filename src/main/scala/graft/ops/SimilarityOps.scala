@@ -546,8 +546,8 @@ object SimilarityOps {
     // payload (guide §2.3 "aggregate before you shuffle"). Ordering is
     // the same (cos desc, then cid asc, encoded as max over
     // (cos, -cid)); vec rides in the struct and is never reached by the
-    // comparator (cid is unique per candidate). SimilaritySpec pins
-    // equality against the retired window form.
+    // comparator (cid is unique per candidate). LlmOpsSpec "kmeans
+    // assignment: aggregate argmax equals the retired window form" pins it.
     e.crossJoin(broadcast(cents))
       .groupBy(col("vec_id"))
       .agg(max(struct(

@@ -12,8 +12,8 @@ import graft.ops.{EventOps, RuleBasedTrailClassifier, Sinks, WeatherModel}
   * (`/root/reference/DESIGN.md:71-73`).
   *
   * Scale: each stage is one or two shuffles keyed on city_id; stages chain
-  * without materialization unless a sink is interposed, so the whole
-  * pipeline is a single Spark job DAG.
+  * without materialization unless a sink is interposed. Each broadcast
+  * build and each AQE query stage still runs as its own Spark job.
   */
 object Pipelines {
 
@@ -99,26 +99,23 @@ object Pipelines {
     * of [[EventOps.processedIds]] for the cache), so the driver's DuckDB
     * compare pins the full composition, not just the stages.
     *
-    * Scale: the task list and processed cache are per-key distinct
-    * aggregates over their own bounded key sets, then broadcast — so the
-    * weather FACTS shuffle exactly once, at the classifier aggregation on
-    * city_id (3 hash exchanges total, only one carrying fact rows; pinned
-    * in PlanAuditSpec).
+    * Scale: every fact's city is in the §3.1 task list by construction,
+    * so the §3.2 task × weather join reduces to dropping null cities (an
+    * inner join never matches a null key). One fact scan, one fact shuffle
+    * (the classifier aggregation on city_id), one broadcast (the bounded
+    * processed cache into the A9 left-anti join); 6 jobs per action with
+    * AQE on. Plan pinned in PlanAuditSpec, parity with the task-list
+    * composition in PipelineSpec.
     */
   def pipelineE2E(spark: SparkSession, sfDir: String): DataFrame = {
-    // §3.1 scheduler: enumerate + set-dedup the task list
-    val tasks = EventOps.s1DimDedup(spark, sfDir)
-    // §3.3 A9: skip cities already in the (bounded) processed cache
-    val fresh = tasks.join(
-      broadcast(EventOps.processedIds(spark, sfDir)
-        .select(col("user_id").as("city_id"))),
-      Seq("city_id"), "left_anti")
-    // §3.2 ingestion: task × weather lookup + typed projection + validity
-    val weather = WeatherModel.weatherRecords(spark, sfDir)
-      .join(broadcast(fresh), Seq("city_id"))
+    val fresh = WeatherModel.weatherRecords(spark, sfDir)
+      .where(col("city_id").isNotNull)
+      .join(
+        broadcast(EventOps.processedIds(spark, sfDir)
+          .select(col("user_id").as("city_id"))),
+        Seq("city_id"), "left_anti")
       .where(col("temperature_deg_c").isNotNull && col("rain_fall_total_mm") >= 0.0)
-    // §3.3 categorization: flagship classifier → K3 label shape
-    RuleBasedTrailClassifier.classify(weather, WeatherModel.Anchor)
+    RuleBasedTrailClassifier.classify(fresh, WeatherModel.Anchor)
       .orderBy("city_id")
   }
 

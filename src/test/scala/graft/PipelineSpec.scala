@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Sinks, WeatherModel}
+import graft.ops.{EventOps, RuleBasedTrailClassifier, Sinks, WeatherModel}
 import graft.pipeline.Pipelines
 
 /** End-to-end pipeline compositions (SURVEY §3) + sink semantics. */
@@ -48,6 +48,57 @@ class PipelineSpec extends AnyFunSuite {
     unlabeled.foreach(r => assert(r.getString(1) == ""))
     // and unlabeled ⊆ labels output (they are emitted, just flagged)
     assert(stage.labels.where(col("class_label") === "").count() == unlabeled.length)
+  }
+
+  /** Parity reference: the task-list composition `pipelineE2E` retired.
+    * §3.1 distinct cities → A9 left-anti against the processed cache →
+    * §3.2 broadcast task × weather inner join → validity → classifier.
+    */
+  private def taskListPipelineE2E(sfDir: String) = {
+    val tasks = EventOps.s1DimDedup(spark, sfDir)
+    val fresh = tasks.join(
+      broadcast(EventOps.processedIds(spark, sfDir)
+        .select(col("user_id").as("city_id"))),
+      Seq("city_id"), "left_anti")
+    val weather = WeatherModel.weatherRecords(spark, sfDir)
+      .join(broadcast(fresh), Seq("city_id"))
+      .where(col("temperature_deg_c").isNotNull && col("rain_fall_total_mm") >= 0.0)
+    RuleBasedTrailClassifier.classify(weather, WeatherModel.Anchor)
+      .orderBy("city_id")
+  }
+
+  test("pipeline e2e equals the task-list form on null, processed and invalid rows") {
+    // value < 0 is invalid (negative rain). City 1 is processed (an error
+    // event on 2024-01-05); city 2 has only invalid rows; city 3 has one
+    // invalid forecast row among valid ones; null cities appear both as
+    // facts and in the processed cache.
+    val rows = Seq[(Long, String, Option[Long], String, Double)](
+      (1, "2024-01-19 10:00:00", None, "click", 150.0),
+      (2, "2024-01-05 12:00:00", None, "error", 10.0),
+      (3, "2024-01-05 12:00:00", Some(1L), "error", 10.0),
+      (4, "2024-01-19 10:00:00", Some(1L), "click", 150.0),
+      (5, "2024-01-19 10:00:00", Some(2L), "click", -5.0),
+      (6, "2024-01-20 02:00:00", Some(2L), "error", -10.0),
+      (7, "2024-01-19 10:00:00", Some(3L), "view", 300.0),
+      (8, "2024-01-20 05:00:00", Some(3L), "error", 120.0),
+      (9, "2024-01-20 06:00:00", Some(3L), "error", -40.0),
+      (10, "2024-01-18 10:00:00", Some(4L), "purchase", 100.0),
+      (11, "2024-01-20 03:00:00", Some(4L), "signup", 200.0))
+    val sfDir = Files.createTempDirectory("graft_e2e_edges").toString
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    try {
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+        .select(col("event_id"), col("ts").cast("timestamp").as("ts"), col("user_id"),
+          col("event_type"), col("value"), lit(null).cast("string").as("props"))
+        .coalesce(1).write.parquet(s"$sfDir/events.parquet")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+    val got = Pipelines.pipelineE2E(spark, sfDir).collect().toSeq
+    assert(got == taskListPipelineE2E(sfDir).collect().toSeq)
+    assert(!got.exists(_.isNullAt(0)), got)
+    assert(got.map(_.getLong(0)) == Seq(3L, 4L), got)
   }
 
   test("A10: observe() counters report flushed rows without breaking the plan") {

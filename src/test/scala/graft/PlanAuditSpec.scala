@@ -416,17 +416,22 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(winIdx < 0 || winIdx < takeIdx, p)
   }
 
-  test("pipeline e2e: facts shuffle once; task list and processed cache broadcast") {
+  test("pipeline e2e: facts scanned once; processed cache broadcast to anti-join") {
     val df = graft.pipeline.Pipelines.pipelineE2E(spark, dir)
     df.collect()
     val p = plan(df).split("== Initial Plan ==").head
-    // 3 hash exchanges: tasks distinct, processed distinct (both bounded
-    // key sets), and the single classifier aggregation — the ONLY one that
-    // carries fact rows
-    assert("\\+- Exchange hashpartitioning".r.findAllIn(p).size == 3, p)
-    // anti-join and ingest join build sides ride broadcasts
-    assert("\\+- BroadcastExchange".r.findAllIn(p).size >= 2, p)
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
+    // 2 hash exchanges: the processed-cache distinct (a bounded key set)
+    // and the classifier aggregation — the ONLY one that carries fact rows
+    assert("\\+- Exchange hashpartitioning".r.findAllIn(p).size == 2, p)
+    // 2 scans: the facts once, and the processed cache with its
+    // event_type predicate pushed into the reader
+    val scans = p.split("\n").filter(_.contains("Scan parquet"))
+    assert(scans.length == 2, p)
+    assert(scans.count(_.contains("EqualTo(event_type,error)")) == 1, p)
+    // one broadcast, feeding the A9 anti-join; no task × weather inner join
+    assert("\\+- BroadcastExchange".r.findAllIn(p).size == 1, p)
+    val joins = p.split("\n").filter(_.contains("BroadcastHashJoin"))
+    assert(joins.length == 1 && joins.head.contains("LeftAnti"), p)
     assert(!p.contains("CartesianProduct"), p)
   }
 
