@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -378,6 +378,27 @@ object EventOps {
 
   // ---- A9: dedup via left-anti join --------------------------------------
 
+  /** The processed-cache rule on one `events` row: an error event inside
+    * the retention day — the same bounded-cache rule the reference's dedup
+    * cache plays (trimmed to recent ids). Null when `event_type` or `ts` is.
+    */
+  def isProcessedEvent: Column =
+    col("event_type") === "error" &&
+      col("ts") >= lit("2024-01-05 00:00:00").cast("timestamp") &&
+      col("ts") < lit("2024-01-06 00:00:00").cast("timestamp")
+
+  /** The deterministic "already-processed" set: cities with a row where
+    * [[isProcessedEvent]] holds.
+    */
+  def processedIds(s: SparkSession, dir: String): DataFrame =
+    events(s, dir).where(isProcessedEvent).select(col("user_id")).distinct()
+
+  val processedIdsSql: String =
+    """SELECT DISTINCT user_id FROM events
+      |WHERE event_type = 'error'
+      |  AND ts >= TIMESTAMP '2024-01-05 00:00:00'
+      |  AND ts < TIMESTAMP '2024-01-06 00:00:00'""".stripMargin
+
   /** The processed-ids dedup cache (`categorize-trail-conditions/src/db.py:
     * 24-27`, `DESIGN.md:38`) is a left-anti join of tasks against the
     * processed set. The broadcast hint is deliberate AND bounded: the
@@ -388,24 +409,6 @@ object EventOps {
     * the streaming form (`dropDuplicatesWithinWatermark`, state bounded
     * by the watermark), which this library also ships.
     */
-  /** The deterministic "already-processed" set: cities that emitted an
-    * error event inside the retention day — the same bounded-cache rule the
-    * reference's dedup cache plays (trimmed to recent ids).
-    */
-  def processedIds(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
-      .where(
-        col("event_type") === "error" &&
-          col("ts") >= lit("2024-01-05 00:00:00").cast("timestamp") &&
-          col("ts") < lit("2024-01-06 00:00:00").cast("timestamp"))
-      .select(col("user_id")).distinct()
-
-  val processedIdsSql: String =
-    """SELECT DISTINCT user_id FROM events
-      |WHERE event_type = 'error'
-      |  AND ts >= TIMESTAMP '2024-01-05 00:00:00'
-      |  AND ts < TIMESTAMP '2024-01-06 00:00:00'""".stripMargin
-
   def a9AntiJoinDedup(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir)
     val processed = processedIds(s, dir)
@@ -414,6 +417,12 @@ object EventOps {
       .orderBy("city_id")
   }
 
+  /** Oracle for [[a9AntiJoinDedup]]. `NOT IN` differs from the Spark form
+    * on one input: a NULL processed id makes DuckDB return zero rows, while
+    * the equi anti-join ignores it. The `events` fixtures (sf0.001,
+    * sf0.01, sf0.1) have no null `user_id`, so the oracle never sees that
+    * case; the SQL text stays the contract.
+    */
   val a9AntiJoinDedupSql: String =
     """SELECT DISTINCT user_id AS city_id FROM events
       |WHERE user_id NOT IN (

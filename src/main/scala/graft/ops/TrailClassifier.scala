@@ -63,26 +63,44 @@ object RuleBasedTrailClassifier extends TrailConditionClassifier {
     s"(data_source = 'HISTORICAL' AND timestamp_utc < TIMESTAMP '$anchor')" +
       s" OR (${fcst48Sql(anchor)})"
 
-  override def classify(weather: DataFrame, anchor: String = Anchor): DataFrame = {
-    val agg = weather
-      .where(relevantWindow(anchor))
-      .groupBy(col("city_id"))
-      .agg(
-        // A2: trailing 2-day rain; empty → 0 (`classifier.py:34-36`)
-        coalesce(sum(when(hist2d(anchor), rain)), lit(0.0)).as("rain_2d"),
-        // A3: any warm day in the 2-day window (`classifier.py:37-38`)
-        (max(when(hist2d(anchor) && temp > WarmDayC, 1).otherwise(0)) === 1)
-          .as("warm_days"),
-        // A1: first-24 h forecast rain; empty → 0 (`classifier.py:30,46`)
-        coalesce(sum(when(fcst24(anchor), rain)), lit(0.0)).as("fcst_rain_24h"),
-        // A4: avg forecast-24 h temp, 0 when empty (`classifier.py:49-53`)
-        coalesce(avg(when(fcst24(anchor), temp)), lit(0.0)).as("avg_temp_24h"),
-        // A5: max historical temp (`classifier.py:61`)
-        max(when(isHist, temp)).as("max_hist_temp"),
-        // A6: min forecast-24 h temp (`classifier.py:62`)
-        min(when(fcst24(anchor), temp)).as("min_fcst_temp_24h"),
-        // A7: max temp over the whole 48 h horizon (`classifier.py:74`)
-        max(when(fcst48(anchor), temp)).as("max_fcst_temp"))
+  override def classify(weather: DataFrame, anchor: String = Anchor): DataFrame =
+    label(weather, anchor, None)
+
+  /** [[classify]] minus every city that has a row where `exclude` holds
+    * (null counts as false). The test is one more aggregate on the same
+    * city_id shuffle, not a join: such rows pass the window filter so they
+    * reach the aggregate, and whatever else they add to it is dropped with
+    * their city.
+    */
+  def classifyExcluding(weather: DataFrame, anchor: String, exclude: Column): DataFrame =
+    label(weather, anchor, Some(exclude))
+
+  private def label(weather: DataFrame, anchor: String, exclude: Option[Column]): DataFrame = {
+    val aggs = Seq(
+      // A2: trailing 2-day rain; empty → 0 (`classifier.py:34-36`)
+      coalesce(sum(when(hist2d(anchor), rain)), lit(0.0)).as("rain_2d"),
+      // A3: any warm day in the 2-day window (`classifier.py:37-38`)
+      (max(when(hist2d(anchor) && temp > WarmDayC, 1).otherwise(0)) === 1)
+        .as("warm_days"),
+      // A1: first-24 h forecast rain; empty → 0 (`classifier.py:30,46`)
+      coalesce(sum(when(fcst24(anchor), rain)), lit(0.0)).as("fcst_rain_24h"),
+      // A4: avg forecast-24 h temp, 0 when empty (`classifier.py:49-53`)
+      coalesce(avg(when(fcst24(anchor), temp)), lit(0.0)).as("avg_temp_24h"),
+      // A5: max historical temp (`classifier.py:61`)
+      max(when(isHist, temp)).as("max_hist_temp"),
+      // A6: min forecast-24 h temp (`classifier.py:62`)
+      min(when(fcst24(anchor), temp)).as("min_fcst_temp_24h"),
+      // A7: max temp over the whole 48 h horizon (`classifier.py:74`)
+      max(when(fcst48(anchor), temp)).as("max_fcst_temp"))
+    val agg = exclude match {
+      case None =>
+        weather.where(relevantWindow(anchor)).groupBy(col("city_id"))
+          .agg(aggs.head, aggs.tail: _*)
+      case Some(p) =>
+        weather.where(relevantWindow(anchor) || p).groupBy(col("city_id"))
+          .agg(aggs.head, aggs.tail :+ max(coalesce(p, lit(false))).as("excluded"): _*)
+          .where(!col("excluded"))
+    }
 
     // Rule order fixed by `classifier.py:85-91`: mud, heat, wind (stub,
     // always null — `classifier.py:69-71`), snowpack, heavy precipitation.

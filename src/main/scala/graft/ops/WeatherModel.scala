@@ -38,16 +38,24 @@ object WeatherModel {
   val Historical = "HISTORICAL"
   val Forecast = "FORECAST"
 
-  /** events → WeatherRecord-shaped facts (map-side only). */
-  def weatherRecords(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.read(spark, sfDir, "events").select(
+  /** events → WeatherRecord-shaped facts (map-side only). `extra` columns
+    * over the raw `events` row ride along in the same projection.
+    */
+  def weatherRecords(spark: SparkSession, sfDir: String, extra: Column*): DataFrame =
+    Tables.read(spark, sfDir, "events").select(Seq(
       col("user_id").as("city_id"),
       col("ts").as("timestamp_utc"),
       (col("value") / 4.0d - 12.0d).as("temperature_deg_c"),
       (col("value") / 25.0d).as("rain_fall_total_mm"),
       when(col("event_type").isin("click", "view", "purchase"), Historical)
         .otherwise(Forecast)
-        .as("data_source"))
+        .as("data_source")) ++ extra: _*)
+
+  /** The ingestion validity gate (P6): a temperature and a non-negative
+    * rain total.
+    */
+  def isValid: Column =
+    col("temperature_deg_c").isNotNull && col("rain_fall_total_mm") >= 0.0
 
   /** Matching SQL fragment for the DuckDB oracle (one definition, reused by
     * every oracle query so Spark and DuckDB always agree on the projection).

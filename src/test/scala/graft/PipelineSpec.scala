@@ -68,22 +68,31 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("pipeline e2e equals the task-list form on null, processed and invalid rows") {
-    // value < 0 is invalid (negative rain). City 1 is processed (an error
-    // event on 2024-01-05); city 2 has only invalid rows; city 3 has one
-    // invalid forecast row among valid ones; null cities appear both as
-    // facts and in the processed cache.
-    val rows = Seq[(Long, String, Option[Long], String, Double)](
-      (1, "2024-01-19 10:00:00", None, "click", 150.0),
-      (2, "2024-01-05 12:00:00", None, "error", 10.0),
-      (3, "2024-01-05 12:00:00", Some(1L), "error", 10.0),
-      (4, "2024-01-19 10:00:00", Some(1L), "click", 150.0),
-      (5, "2024-01-19 10:00:00", Some(2L), "click", -5.0),
-      (6, "2024-01-20 02:00:00", Some(2L), "error", -10.0),
-      (7, "2024-01-19 10:00:00", Some(3L), "view", 300.0),
-      (8, "2024-01-20 05:00:00", Some(3L), "error", 120.0),
-      (9, "2024-01-20 06:00:00", Some(3L), "error", -40.0),
-      (10, "2024-01-18 10:00:00", Some(4L), "purchase", 100.0),
-      (11, "2024-01-20 03:00:00", Some(4L), "signup", 200.0))
+    // value < 0 or null is invalid. City 1 is processed (an error event on
+    // 2024-01-05); city 2 has only invalid rows; city 3 has one invalid
+    // forecast row among valid ones; null cities appear both as facts and
+    // in the processed cache. Cities 5 and 6 are processed only by an
+    // invalid error row (null, negative value), so validity must not be
+    // applied before the processed check; city 7's only row is processed.
+    val rows = Seq[(Long, String, Option[Long], String, Option[Double])](
+      (1, "2024-01-19 10:00:00", None, "click", Some(150.0)),
+      (2, "2024-01-05 12:00:00", None, "error", Some(10.0)),
+      (3, "2024-01-05 12:00:00", Some(1L), "error", Some(10.0)),
+      (4, "2024-01-19 10:00:00", Some(1L), "click", Some(150.0)),
+      (5, "2024-01-19 10:00:00", Some(2L), "click", Some(-5.0)),
+      (6, "2024-01-20 02:00:00", Some(2L), "error", Some(-10.0)),
+      (7, "2024-01-19 10:00:00", Some(3L), "view", Some(300.0)),
+      (8, "2024-01-20 05:00:00", Some(3L), "error", Some(120.0)),
+      (9, "2024-01-20 06:00:00", Some(3L), "error", Some(-40.0)),
+      (10, "2024-01-18 10:00:00", Some(4L), "purchase", Some(100.0)),
+      (11, "2024-01-20 03:00:00", Some(4L), "signup", Some(200.0)),
+      (12, "2024-01-19 10:00:00", Some(5L), "click", Some(150.0)),
+      (13, "2024-01-20 04:00:00", Some(5L), "signup", Some(100.0)),
+      (14, "2024-01-05 12:00:00", Some(5L), "error", None),
+      (15, "2024-01-19 10:00:00", Some(6L), "view", Some(150.0)),
+      (16, "2024-01-20 04:00:00", Some(6L), "signup", Some(100.0)),
+      (17, "2024-01-05 12:00:00", Some(6L), "error", Some(-20.0)),
+      (18, "2024-01-05 12:00:00", Some(7L), "error", Some(10.0)))
     val sfDir = Files.createTempDirectory("graft_e2e_edges").toString
     val key = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.getOption(key)
