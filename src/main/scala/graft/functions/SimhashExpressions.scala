@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, St
 
 /** Native per-row SimHash (SURVEY §2.11 preference order (b)).
   *
-  * The SQL-expression form in
-  * [[graft.streaming.StreamingDedup.simhashRowExprSql]] — an `aggregate`
+  * The SQL-expression form (`simhashRowExprSql`, kept in StreamingSpec as
+  * this expression's parity reference) — an `aggregate`
   * over `transform`ed shingles with a 60-element `zip_with` per shingle —
   * runs entirely in interpreted higher-order lambdas: ~3.3 s for 5 000
   * docs at sf0.1, the single largest steady cost left in the bench. This

@@ -1091,10 +1091,13 @@ object CorpusOps {
     * tokenize+explode+aggregate pipeline ran four times per execution
     * (4 documents scans in the round-19 before-plan). localCheckpoint
     * materializes the BOUNDED counts (≤ sources × [[DsirBuckets]] rows)
-    * once per execution — still recomputed from parquet on every
-    * invocation — and every consumer reads the checkpoint (guide §3.3).
-    * The streaming monitor is untouched: its store already holds these
-    * counts materialized.
+    * once per call — still recomputed from parquet on every call — and
+    * every consumer reads the checkpoint (guide §3.3). The streaming
+    * monitor is untouched: its store already holds these counts
+    * materialized.
+    *
+    * Eager: building the frame runs the bucket-count job at once, through
+    * an eager `localCheckpoint`, before any action on the result.
     */
   private[graft] def sourceDriftOf(d: DataFrame): DataFrame =
     klFromSourceBucketCounts(sourceBucketCountsOf(d).localCheckpoint())

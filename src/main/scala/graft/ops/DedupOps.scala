@@ -1136,29 +1136,6 @@ object DedupOps {
         (size(col("toks")).cast("long") - col("sc.n_kept")).as("n_removed"),
         col("sc.clean_text").as("clean_text"))
 
-  /** The retired declarative rewrite — kept as the parity reference the
-    * spec pins [[applySpanScrub]]'s native expression against. */
-  private[graft] def applySpanScrubComposed(
-      d: DataFrame, dupStarts: DataFrame, gram: Int): DataFrame =
-    d
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .join(dupStarts, Seq("doc_id"), "left")
-      // covered = ∪ [start, start+gram) over this doc's duplicated windows
-      .withColumn("covered",
-        flatten(transform(
-          coalesce(col("ss"), array().cast("array<int>")),
-          s0 => sequence(s0, s0 + lit(gram - 1)))))
-      // surviving positions in order: hash-set difference, then project the
-      // tokens — linear in doc length
-      .withColumn("keep_pos",
-        array_except(sequence(lit(1), size(col("toks"))), col("covered")))
-      .withColumn("clean", transform(col("keep_pos"), p => element_at(col("toks"), p)))
-      .select(
-        col("doc_id"),
-        size(col("toks")).cast("long").as("n_tokens"),
-        (size(col("toks")) - size(col("clean"))).cast("long").as("n_removed"),
-        array_join(col("clean"), " ").as("clean_text"))
-
   def duplicateSpanScrubSql(gram: Int = 10): String = {
     val h = hash60Sql(s"array_to_string(list_slice(toks, start, start + ${gram - 1}), ' ')")
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),

@@ -485,9 +485,9 @@ object MultimodalOps {
     // an AudioInputStream + ByteArrayOutputStream + stream-copy per row
     // that triaged at ~40% of q_multimodal_audio's steady cost. The
     // canonical 44-byte PCM header written here is BYTE-IDENTICAL to the
-    // JDK WaveFileWriter's output (pinned against AudioSystem.write in
-    // MultimodalSpec), so the read side still exercises the real codec on
-    // the same bytes.
+    // JDK WaveFileWriter's output (pinned against AudioSystem.write by
+    // LlmOpsSpec's encodeWavViaAudioSystem), so the read side still
+    // exercises the real codec on the same bytes.
     val dataLen = nFrames * channels * 2
     val buf = java.nio.ByteBuffer.allocate(44 + dataLen)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -513,36 +513,6 @@ object MultimodalOps {
       i += 1
     }
     buf.array()
-  }
-
-  /** The retired AudioSystem.write form of [[encodeWav]] — kept as the
-    * byte-equality reference MultimodalSpec pins the hand-rolled header
-    * against (the JDK codec is the ground truth for "is this a real WAV"). */
-  private[graft] def encodeWavViaAudioSystem(id: Long): Array[Byte] = {
-    val sampleRate = (8000 + (id % 5) * 2000).toInt
-    val channels = (id % 2 + 1).toInt
-    val nFrames = (id % 50 + 20).toInt
-    val fmt = new javax.sound.sampled.AudioFormat(
-      sampleRate.toFloat, 16, channels, true, false)
-    val data = new Array[Byte](nFrames * channels * 2)
-    var i = 0
-    while (i < nFrames) {
-      var c = 0
-      while (c < channels) {
-        val v = (((id * 31 + 7L * i + 3L * c) % 65536L) - 32768L).toInt
-        val off = (i * channels + c) * 2
-        data(off) = (v & 0xff).toByte
-        data(off + 1) = ((v >> 8) & 0xff).toByte
-        c += 1
-      }
-      i += 1
-    }
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(data), fmt, nFrames.toLong)
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(
-      ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, baos)
-    baos.toByteArray
   }
 
   /** (media_id, payload binary) — a genuine WAV file per document id. */

@@ -1072,6 +1072,11 @@ object SimilarityOps {
     * 100 TB the same shape holds: no stage ever sees a cross-cluster pair.
     * τ reuses [[EmbDupThreshold]] — tuned to this synthetic corpus (real
     * corpora with planted dups would run τ ≈ 0.9).
+    *
+    * Eager: building the frame runs the kmeans assignment job at once,
+    * through an eager `localCheckpoint`, before any action on the result
+    * (and trains the centroids first if they are not memoized yet). The
+    * returned plan reads the checkpoint.
     */
   def semDedup(
       s: SparkSession, dir: String,
@@ -1081,8 +1086,8 @@ object SimilarityOps {
     // so neither Catalyst exchange reuse nor AQE stage reuse can unify
     // them and the scan+assign pipeline ran three times per execution.
     // localCheckpoint materializes the bounded (vec_id, vec, cid) frame
-    // once per execution (still recomputed from parquet on every
-    // invocation — nothing crosses runs); all three consumers read the
+    // once per call, when this frame is built (recomputed from parquet on
+    // every call — nothing crosses runs); all three consumers read the
     // checkpoint (guide §3.3: materialize to stop duplicate subtrees).
     val assigned = kmeansAssign(emb(s, dir), kmeansCentroids(s, dir))
       .select(col("vec_id"), col("vec"), col("cid"))
@@ -1123,6 +1128,9 @@ object SimilarityOps {
     * conditional struct-extreme aggregate elects the neighbor (max cos,
     * ties to the smallest id — the [[hardNegatives]] device); singleton
     * cells surface with a null neighbor rather than vanishing.
+    *
+    * Eager, as [[semDedup]]: building the frame runs the assignment job at
+    * once, through an eager `localCheckpoint`.
     */
   def knnGraph(s: SparkSession, dir: String): DataFrame = {
     // same three-consumer checkpoint rationale as [[semDedup]]
@@ -1278,12 +1286,6 @@ object SimilarityOps {
   val PqShortlist = 64
 
   private def subvec(c: Column, j: Int): Column = slice(c, j * SubDim + 1, SubDim)
-
-  /** Composed higher-order squared-L2 — the reference form the native
-    * expression is tested against (same left-fold, bit-identical).
-    */
-  def l2sqComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
 
   /** Squared-L2 between equal-length double arrays (PQ's native metric) —
     * the codegen'd single-pass [[graft.functions.L2SquaredDistance]].

@@ -42,15 +42,6 @@ object Skew {
         max(col("__max")).as("max_value"))
   }
 
-  /** Unsalted reference form, for equivalence testing. */
-  def directStats(df: DataFrame, key: String, valueCol: String): DataFrame =
-    df.groupBy(col(key))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col(valueCol)).as("sum_value"),
-        min(col(valueCol)).as("min_value"),
-        max(col(valueCol)).as("max_value"))
-
   /** Salted broadcast-join helper for a skewed fact ⋈ small dim: explodes
     * the dim to (dimKey, salt) pairs so the fact side's hot key spreads
     * over `salts` partitions even under a shuffle join.

@@ -43,8 +43,8 @@ object TextOps {
     textStatsOf(docs(s, dir))
 
   /** One compiled pass per document (round-18 optimization, same device
-    * as [[qualityRepetitionOf]]): the retired per-row form (kept below as
-    * [[textStatsComposedOf]], the spec's parity reference) paid three
+    * as [[qualityRepetitionOf]]): the retired per-row form (kept in LlmOpsSpec
+    * as `textStatsComposedOf`, the parity reference) paid three
     * interpreted array passes — `array_distinct`, the stopword `filter`
     * lambda, and the `aggregate(transform(...))` BPE fold.
     * [[graft.functions.TextStatsRowExpr]] computes the four integer
@@ -70,29 +70,6 @@ object TextOps {
           lit(0.5) * (col("st.uniq").cast("double") / nL) +
             lit(0.5) * (lit(1.0) - col("st.stop_c").cast("double") / nL), 4)
           .as("quality_score"))
-      .orderBy("doc_id")
-  }
-
-  private[graft] def textStatsComposedOf(d: DataFrame): DataFrame = {
-    val n = size(tokens)
-    val nUniq = size(array_distinct(tokens))
-    val nStop = size(filter(tokens, t => t.isin("the", "a")))
-    d.select(
-      col("doc_id"),
-      n.cast("long").as("n_tokens"),
-      nUniq.cast("long").as("n_uniq_tokens"),
-      round(nUniq.cast("double") / n, 4).as("type_token_ratio"),
-      round(nStop.cast("double") / n, 4).as("stopword_ratio"),
-      // mean token length from arithmetic identity: chars minus (n-1) spaces
-      round((length(col("text")) - n + 1).cast("double") / n, 4)
-        .as("avg_token_len"),
-      aggregate(
-        transform(tokens, t => ceil(length(t).cast("double") / 4.0)),
-        lit(0L), (acc, x) => acc + x).as("n_bpe_est"),
-      round(
-        lit(0.5) * (nUniq.cast("double") / n) +
-          lit(0.5) * (lit(1.0) - nStop.cast("double") / n), 4)
-        .as("quality_score"))
       .orderBy("doc_id")
   }
 

@@ -75,55 +75,15 @@ object StreamingDedup {
 
   // ---- incremental SimHash near-pairs ------------------------------------
 
-  /** Per-ROW 60-bit SimHash — the streaming form of the batch vote, where
-    * one row carries the whole document so no shingle explode / groupBy is
-    * needed: distinct word-bigram shingles → 60-bit md5-prefix hash per
-    * shingle → majority vote per bit (set iff 2·ones > n, the exact batch
-    * tie rule). One `aggregate` pass over the shingle array per row; the
-    * inner 60-element fold is the same per-shingle work the batch form
-    * spreads over exploded rows.
-    */
-  private[streaming] def simhashRowExprSql(bits: Int): String = {
-    // REFERENCE form only — [[fingerprints]] ships the native codegen'd
-    // [[graft.functions.SimhashRowFp]] (~6× cheaper at sf0.1: 3.3 → 0.5 s).
-    // Kept because this string is the exact executable spec the native
-    // expression is asserted bit-equal to (StreamingSpec), in the same SQL
-    // dialect as the DuckDB oracle. Deliberately the PLAIN per-bit fold,
-    // not the batch packedVoteAggs packing: higher-order lambdas never
-    // enter codegen, so the packing's payoff doesn't exist here (an A/B at
-    // sf0.1 measured it SLOWER, 4.5 vs 3.4 s — ~40 % more primitive ops
-    // per shingle).
-    // try_element_at for the same 1-token-doc ANSI edge as the batch
-    // bigramShingles (null → concat_ws skips → bare token, oracle-equal)
-    val shingles =
-      """array_distinct(transform(
-        |      sequence(1, greatest(size(toks) - 1, 1)),
-        |      i -> concat_ws(' ', element_at(toks, i), try_element_at(toks, i + 1))))"""
-        .stripMargin
-    val h = "cast(conv(substring(md5(sh), 1, 15), 16, 10) as bigint)"
-    s"""aggregate(
-       |  transform($shingles, sh -> $h),
-       |  named_struct(
-       |    'n', cast(0 as bigint),
-       |    'ones', array_repeat(cast(0 as bigint), $bits)),
-       |  (acc, h) -> named_struct(
-       |    'n', acc.n + cast(1 as bigint),
-       |    'ones', zip_with(
-       |      acc.ones,
-       |      transform(sequence(0, ${bits - 1}), b -> shiftright(h, b) & cast(1 as bigint)),
-       |      (o, x) -> o + x)),
-       |  acc -> aggregate(
-       |    sequence(0, ${bits - 1}),
-       |    cast(0 as bigint),
-       |    (fp, b) -> fp + if(2 * element_at(acc.ones, b + 1) > acc.n,
-       |      shiftleft(cast(1 as bigint), b), cast(0 as bigint))))""".stripMargin
-  }
-
-  /** (doc_id, simhash): map-side fingerprints of a (streaming or batch)
-    * documents frame. Computed by the native codegen'd
-    * [[graft.functions.SimhashRowFp]] — bit-identical to
-    * [[simhashRowExprSql]] (StreamingSpec asserts equality), ~10× cheaper
-    * per row than the interpreted higher-order fold.
+  /** (doc_id, simhash): map-side per-ROW 60-bit SimHash of a (streaming
+    * or batch) documents frame — the streaming form of the batch vote,
+    * where one row carries the whole document so no shingle explode /
+    * groupBy is needed: distinct word-bigram shingles → 60-bit md5-prefix
+    * hash per shingle → majority vote per bit (set iff 2·ones > n, the
+    * exact batch tie rule). Computed by the native codegen'd
+    * [[graft.functions.SimhashRowFp]] — bit-identical to the interpreted
+    * higher-order fold StreamingSpec keeps as `simhashRowExprSql` (it
+    * asserts equality), ~10× cheaper per row.
     */
   def fingerprints(docs: DataFrame): DataFrame =
     docs
@@ -132,16 +92,6 @@ object StreamingDedup {
         col("doc_id"),
         graft.functions.SimhashExpressions
           .simhash_row(col("toks"), DedupOps.SimhashWideBits).as("simhash"))
-
-  /** The SQL-expression reference form of [[fingerprints]] — kept as the
-    * spec the native expression is tested against.
-    */
-  private[graft] def fingerprintsReference(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(
-        col("doc_id"),
-        expr(simhashRowExprSql(DedupOps.SimhashWideBits)).as("simhash"))
 
   final case class DupPair(doc_a: Long, doc_b: Long, hamming: Long)
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +21,32 @@ class LlmOpsSpec extends AnyFunSuite {
         col("n_tokens") <= 0 || col("n_bpe_est") < col("n_tokens")).count() == 0)
   }
 
+  /** The retired per-row form of [[TextOps.textStatsOf]]: three
+    * interpreted array passes per document, kept as its parity reference. */
+  private def textStatsComposedOf(d: DataFrame): DataFrame = {
+    val tokens = TextOps.tokens
+    val n = size(tokens)
+    val nUniq = size(array_distinct(tokens))
+    val nStop = size(filter(tokens, t => t.isin("the", "a")))
+    d.select(
+      col("doc_id"),
+      n.cast("long").as("n_tokens"),
+      nUniq.cast("long").as("n_uniq_tokens"),
+      round(nUniq.cast("double") / n, 4).as("type_token_ratio"),
+      round(nStop.cast("double") / n, 4).as("stopword_ratio"),
+      // mean token length from arithmetic identity: chars minus (n-1) spaces
+      round((length(col("text")) - n + 1).cast("double") / n, 4)
+        .as("avg_token_len"),
+      aggregate(
+        transform(tokens, t => ceil(length(t).cast("double") / 4.0)),
+        lit(0L), (acc, x) => acc + x).as("n_bpe_est"),
+      round(
+        lit(0.5) * (nUniq.cast("double") / n) +
+          lit(0.5) * (lit(1.0) - nStop.cast("double") / n), 4)
+        .as("quality_score"))
+      .orderBy("doc_id")
+  }
+
   test("text stats: native one-pass form is bit-parity with the composed form") {
     import spark.implicits._
     // real corpus + degenerate corners: 1-token, all-same, all-stopword,
@@ -38,7 +65,7 @@ class LlmOpsSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).toSeq
     assert(canon(TextOps.textStatsOf(base)) ==
-      canon(TextOps.textStatsComposedOf(base)))
+      canon(textStatsComposedOf(base)))
     // the null-token corner exercised directly on the array form
     val arr = Seq(Tuple1(Seq(Option("ab"), Option.empty[String], Option("cdefg"))))
       .toDF("toks")
@@ -263,6 +290,29 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(n2 == 27L && rem2 == 12L && clean2 == uniqA, s"doc2: $rem2 '$clean2'")
   }
 
+  /** The retired declarative rewrite of [[DedupOps.applySpanScrub]], kept
+    * as the parity reference for its native expression. */
+  private def applySpanScrubComposed(
+      d: DataFrame, dupStarts: DataFrame, gram: Int): DataFrame =
+    d
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .join(dupStarts, Seq("doc_id"), "left")
+      // covered = ∪ [start, start+gram) over this doc's duplicated windows
+      .withColumn("covered",
+        flatten(transform(
+          coalesce(col("ss"), array().cast("array<int>")),
+          s0 => sequence(s0, s0 + lit(gram - 1)))))
+      // surviving positions in order: hash-set difference, then project the
+      // tokens — linear in doc length
+      .withColumn("keep_pos",
+        array_except(sequence(lit(1), size(col("toks"))), col("covered")))
+      .withColumn("clean", transform(col("keep_pos"), p => element_at(col("toks"), p)))
+      .select(
+        col("doc_id"),
+        size(col("toks")).cast("long").as("n_tokens"),
+        (size(col("toks")) - size(col("clean"))).cast("long").as("n_removed"),
+        array_join(col("clean"), " ").as("clean_text"))
+
   test("span scrub: native expression is row-identical to the composed rewrite") {
     // the round-18 native span_scrub expression replaced the interpreted
     // three-lambda rewrite; pin bit-parity over the real corpus AND the
@@ -288,7 +338,7 @@ class LlmOpsSpec extends AnyFunSuite {
         // recompute dupStarts exactly as duplicateSpanScrubOf does, then
         // route through the retired composed rewrite
         val d = corpus
-        val out = graft.ops.DedupOps.applySpanScrubComposed(
+        val out = applySpanScrubComposed(
           d, graft.ops.DedupOps.dupStartsOf(d, g), g).orderBy("doc_id")
         out.collect().map(key).sortBy(_._1)
       }
@@ -886,6 +936,36 @@ class LlmOpsSpec extends AnyFunSuite {
       s"prefilter too weak: $nCandidates candidates of ~$nAllGrams grams")
   }
 
+  /** The retired AudioSystem.write form of [[MultimodalOps.encodeWav]],
+    * kept as the byte-equality reference for the hand-rolled header (the
+    * JDK codec is the ground truth for "is this a real WAV"). */
+  private def encodeWavViaAudioSystem(id: Long): Array[Byte] = {
+    val sampleRate = (8000 + (id % 5) * 2000).toInt
+    val channels = (id % 2 + 1).toInt
+    val nFrames = (id % 50 + 20).toInt
+    val fmt = new javax.sound.sampled.AudioFormat(
+      sampleRate.toFloat, 16, channels, true, false)
+    val data = new Array[Byte](nFrames * channels * 2)
+    var i = 0
+    while (i < nFrames) {
+      var c = 0
+      while (c < channels) {
+        val v = (((id * 31 + 7L * i + 3L * c) % 65536L) - 32768L).toInt
+        val off = (i * channels + c) * 2
+        data(off) = (v & 0xff).toByte
+        data(off + 1) = ((v >> 8) & 0xff).toByte
+        c += 1
+      }
+      i += 1
+    }
+    val ais = new javax.sound.sampled.AudioInputStream(
+      new java.io.ByteArrayInputStream(data), fmt, nFrames.toLong)
+    val baos = new java.io.ByteArrayOutputStream()
+    javax.sound.sampled.AudioSystem.write(
+      ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, baos)
+    baos.toByteArray
+  }
+
   test("multimodal: real WAVs round-trip through AudioSystem with exact format and PCM") {
     // payloads are genuine RIFF/WAVE files (magic header), not fakes
     MultimodalOps.wavTable(spark, dir).limit(3).collect().foreach { r =>
@@ -901,7 +981,7 @@ class LlmOpsSpec extends AnyFunSuite {
     (0L to 99L) :+ 123456789L foreach { id =>
       assert(java.util.Arrays.equals(
         MultimodalOps.encodeWav(id),
-        MultimodalOps.encodeWavViaAudioSystem(id)),
+        encodeWavViaAudioSystem(id)),
         s"hand-rolled WAV bytes differ from AudioSystem.write for id $id")
     }
     // decoded rate/channels/frames/first-sample match the synthesis

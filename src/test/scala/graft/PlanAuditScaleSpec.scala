@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+
+import graft.ops.SimilarityOps
 
 /** Physical-plan pins at the BENCH scale factor (sf0.1) for the expensive
   * tier. [[PlanAuditSpec]] pins shapes at sf0.001/sf0.01; round 5 proved
@@ -19,23 +20,11 @@ class PlanAuditScaleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val dir = "/root/testdata/sf0.1"
 
-  /** Final adaptive plan, executed once per query and memoized. */
+  /** Final adaptive plan ([[Dev.finalPlan]]), executed once per query and
+    * memoized. */
   private val planCache = scala.collection.mutable.Map.empty[String, String]
-  private def finalPlan(name: String): String = planCache.getOrElseUpdate(name, {
-    val df: DataFrame = SparkEntry.queries(name)(spark, dir)
-    df.collect()
-    // strip cached-build subtrees BEFORE dropping the initial-plan echo: a
-    // nested AdaptiveSparkPlan inside an InMemoryRelation prints its own
-    // "== Initial Plan ==", and splitting on the raw string would truncate
-    // the OUTER final plan at that nested marker
-    stripCachedBuilds(df.queryExecution.executedPlan.toString)
-      .split("== Initial Plan ==").head
-  })
-
-  /** Cached-build subtrees run once at cache fill, not per execution —
-    * excluded from per-execution budgets (shared rule, see PlanReport). */
-  private def stripCachedBuilds(p: String): String =
-    PlanReport.stripCachedBuilds(p)
+  private def finalPlan(name: String): String = planCache.getOrElseUpdate(name,
+    Dev.finalPlan(SparkEntry.queries(name)(spark, dir)))
 
   private def hashExchanges(p: String): Int =
     "\\+- Exchange hashpartitioning".r.findAllIn(p).size
@@ -43,8 +32,9 @@ class PlanAuditScaleSpec extends AnyFunSuite {
     "\\+- BroadcastExchange".r.findAllIn(p).size
 
   /** Common 100 TB invariants for every pinned query. */
-  private def auditCommon(name: String): String = {
-    val p = finalPlan(name)
+  private def auditCommon(name: String): String = auditCommon(name, finalPlan(name))
+
+  private def auditCommon(name: String, p: String): String = {
     assert(!p.contains("CartesianProduct"), s"$name plans a cartesian product:\n$p")
     // SinglePartition exchanges may only carry one row per upstream
     // partition (scalar-agg partials) — never data rows
@@ -98,6 +88,23 @@ class PlanAuditScaleSpec extends AnyFunSuite {
     assert(!p.contains("embeddings.parquet"),
       s"$name recomputes the assignment from parquet:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
+  }
+
+  test("sf0.1 coarse-cell assignment: broadcast centroids, one vec_id shuffle") {
+    // the kmeans assignment q_sem_dedup and q_knn_graph build inside their
+    // checkpoint job, which the query plans above only see as Scan
+    // ExistingRDD: the k centroids broadcast into the crossJoin, and the
+    // argmax aggregate is the only shuffle, keyed by vec_id
+    val p = auditCommon("coarseCells",
+      Dev.finalPlan(SimilarityOps.coarseCells(spark, dir)))
+    // the broadcast subtree (printed last) is the memoized centroid
+    // artifact, never the embeddings
+    val broadcastSide = p.split("\n").dropWhile(!_.contains("BroadcastExchange"))
+    assert(broadcastSide.exists(_.contains("ivf-centroids")), p)
+    assert(!broadcastSide.exists(_.contains("embeddings.parquet")), p)
+    assert(hashExchanges(p) == 1, p)
+    val ex = p.split("\n").find(_.contains("Exchange hashpartitioning")).get
+    assert(ex.contains("hashpartitioning(vec_id"), ex)
   }
 
   test("sf0.1 q_sem_dedup: assignment checkpointed once, bounded self-join shuffles") {

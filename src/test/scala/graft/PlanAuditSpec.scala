@@ -535,4 +535,21 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("partial_hll_sketch_agg"), p)
     assert(p.contains("hll_union_agg"), p)
   }
+
+  test("Dev.finalPlan: the executed final plan, cached builds not counted") {
+    // the cached aggregate's build shuffles on user_id once, at cache
+    // fill; per execution the frame shuffles only on event_type
+    val ev = Tables.read(spark, dir, "events")
+    val perUser = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n")).cache()
+    try {
+      val df = ev.join(perUser, Seq("user_id"))
+        .groupBy(col("event_type")).agg(sum(col("n")).as("n"))
+      val p = Dev.finalPlan(df)
+      assert(p.startsWith("AdaptiveSparkPlan isFinalPlan=true"), p)
+      assert(!p.contains("== Initial Plan =="), p)
+      assert(p.contains("InMemoryTableScan"), p)
+      assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
+      assert(!p.contains("hashpartitioning(user_id"), p)
+    } finally perUser.unpersist()
+  }
 }

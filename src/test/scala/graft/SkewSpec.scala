@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +15,22 @@ class SkewSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val dir = "/root/testdata/sf0.001"
 
+  /** Unsalted reference form of [[Skew.saltedStats]]. */
+  private def directStats(df: DataFrame, key: String, valueCol: String): DataFrame =
+    df.groupBy(col(key))
+      .agg(
+        count(lit(1)).as("n"),
+        sum(col(valueCol)).as("sum_value"),
+        min(col(valueCol)).as("min_value"),
+        max(col(valueCol)).as("max_value"))
+
   test("salted stats are exactly equal to direct stats (reassociatable aggs)") {
     val ev = Tables.read(spark, dir, "events")
     // build a skewed copy: map 80% of rows onto one hot key
     val skewed = ev.withColumn(
       "user_id",
       when(col("event_id") % 5 =!= 0, 7L).otherwise(col("user_id")))
-    val direct = Skew.directStats(skewed, "user_id", "value")
+    val direct = directStats(skewed, "user_id", "value")
       .orderBy("user_id").collect()
     val salted = Skew.saltedStats(skewed, "user_id", "value", salts = 8)
       .orderBy("user_id").collect()
