@@ -39,15 +39,10 @@ object SimilarityOps {
   def dotSql(a: String, b: String): String =
     s"list_sum(list_transform(range(1, $Dim + 1), i -> $a[i] * $b[i]))"
 
-  /** Composed higher-order form — six interpreted array walks; kept as the
-    * reference implementation the native expression is tested against.
-    */
-  def cosineComposed(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-
   /** Native codegen'd single-pass cosine (see
-    * [[graft.functions.CosineSimilarity]]); bit-identical to
-    * [[cosineComposed]] by construction.
+    * [[graft.functions.CosineSimilarity]]); bit-identical to the composed
+    * higher-order form (`VectorExpressionSpec.cosineComposed`, the specs'
+    * parity reference) by construction.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.cosine_sim(a, b)
@@ -1485,11 +1480,11 @@ object SimilarityOps {
     }
     val shortW = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_d2").asc, col("vec_id"))
-    // native one-loop ADC sum (round-18): the composed fold (kept as
-    // [[adcFoldComposed]], the spec's parity reference) was an interpreted
-    // HigherOrderFunction allocating an m-element sequence + lambda rows
-    // per (candidate, query) PAIR — the exact stream whose row count IS
-    // the ADC scan. Same left-fold order, bit-identical sums.
+    // native one-loop ADC sum (round-18): the composed fold (kept in
+    // VectorExpressionSpec as `adcFoldComposed`, the parity reference) was
+    // an interpreted HigherOrderFunction allocating an m-element sequence
+    // + lambda rows per (candidate, query) PAIR — the exact stream whose
+    // row count IS the ADC scan. Same left-fold order, bit-identical sums.
     val shortlist = pairs
       .withColumn("adc_d2", graft.functions.VectorExpressions
         .adc_sum(col("codes"), col("dtab"), PqK))
@@ -1511,13 +1506,6 @@ object SimilarityOps {
         round(col("cos"), 6).as("cosine"))
       .orderBy("query_id", "rank")
   }
-
-  /** The RETIRED composed ADC fold — parity reference only (spec-pinned
-    * against [[graft.functions.AdcSum]]; see adcShortlistRerank). */
-  private[graft] def adcFoldComposed(codes: Column, dtab: Column): Column =
-    aggregate(sequence(lit(0), lit(PqM - 1)), lit(0.0),
-      (acc, j) => acc + element_at(dtab,
-        (j * PqK + element_at(codes, j + 1) + 1).cast("int")))
 
   // ---- incremental index maintenance --------------------------------------
 

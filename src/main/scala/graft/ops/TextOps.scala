@@ -147,9 +147,9 @@ object TextOps {
   /** One compiled pass per document (round-18 optimization): every output
     * fraction depends only on the row's own tokens, so the retired
     * two-pipeline explode/aggregate/join form (four shuffles of the
-    * exploded token stream — kept below as
-    * [[qualityRepetitionComposedOf]], the spec's parity reference) was
-    * pure overhead. [[graft.functions.RepetitionStatsExpr]] computes the
+    * exploded token stream — kept in SelectionDedupOpsSpec as
+    * `qualityRepetitionComposedOf`, the parity reference) was pure
+    * overhead. [[graft.functions.RepetitionStatsExpr]] computes the
     * five integer aggregates map-side; division + rounding stay in the
     * Catalyst projection so float behavior is unchanged. Zero exchanges
     * before the final sort.
@@ -166,33 +166,6 @@ object TextOps {
         round(col("st.b_top_c").cast("double") / col("st.b_n"), 4)
           .as("top_bigram_frac"))
       .orderBy("doc_id")
-
-  private[graft] def qualityRepetitionComposedOf(d: DataFrame): DataFrame = {
-    val base = d.select(col("doc_id"), tokens.as("toks"))
-    def gramStats(gram: Column, pfx: String) =
-      base.select(col("doc_id"), explode(gram).as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id")).agg(
-          max(col("c")).as(s"${pfx}_top_c"),
-          sum(when(col("c") > 1, col("c")).otherwise(0L)).as(s"${pfx}_dup_c"),
-          sum(col("c")).as(s"${pfx}_n"))
-    val uni = gramStats(col("toks"), "u")
-    // try_element_at on the successor: a 1-token document probes index 2
-    // of a 1-element array, which THROWS under ANSI — the null →
-    // concat_ws skips it and yields the bare token, exactly the oracle's
-    // `|| coalesce(' ' || next, '')` (same convention as
-    // [[graft.ops.DedupOps.bigramShingles]])
-    val bi = gramStats(expr(
-      """transform(sequence(1, greatest(size(toks) - 1, 1)),
-        |  i -> concat_ws(' ', element_at(toks, i), try_element_at(toks, i + 1)))""".stripMargin), "b")
-    uni.join(bi, "doc_id")
-      .select(
-        col("doc_id"),
-        round(col("u_top_c").cast("double") / col("u_n"), 4).as("top_token_frac"),
-        round(col("u_dup_c").cast("double") / col("u_n"), 4).as("dup_token_frac"),
-        round(col("b_top_c").cast("double") / col("b_n"), 4).as("top_bigram_frac"))
-      .orderBy("doc_id")
-  }
 
   /** Oracle-side NON-distinct bigram list (counts matter here, unlike
     * [[graft.ops.DedupOps.shingleListSql]]).

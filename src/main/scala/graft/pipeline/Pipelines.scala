@@ -13,9 +13,9 @@ import graft.ops.{EventOps, RuleBasedTrailClassifier, Sinks, WeatherModel}
   *
   * Scale: each stage is one or two shuffles keyed on city_id; stages chain
   * without materialization unless a sink is interposed. Each broadcast
-  * build, each AQE query stage and each range sort's sample runs as its
-  * own Spark job: [[pipelineE2E]] scans its facts once and shuffles them
-  * once, in 4 jobs per action (traced `trail_batch` in `trailbench/`).
+  * build and each AQE query stage runs as its own Spark job:
+  * [[pipelineE2E]] scans its facts once and shuffles them once, in 2 jobs
+  * per action (traced `trail_batch` in `trailbench/`).
   */
 object Pipelines {
 
@@ -109,17 +109,16 @@ object Pipelines {
     * row is kept if it is valid or flagged (validity must not hide a
     * flag), and cities with a flagged row are dropped after the aggregate.
     * One fact scan, one hash exchange (city_id), no join, no broadcast;
-    * 4 jobs per action with AQE on: the scan and partial aggregate, the
-    * orderBy's range sample, its exchange, and the result stage. Plan
-    * pinned in PlanAuditSpec, parity with the task-list composition in
-    * PipelineSpec.
+    * 2 jobs per action with AQE on: the scan and partial aggregate, and
+    * the result stage. Rows come out in no particular order: the label
+    * sink is a keyed upsert, and the oracle compare sorts. Plan pinned in
+    * PlanAuditSpec, parity with the task-list composition in PipelineSpec.
     */
   def pipelineE2E(spark: SparkSession, sfDir: String): DataFrame = {
     val facts = WeatherModel
       .weatherRecords(spark, sfDir, EventOps.isProcessedEvent.as("processed"))
       .where(col("city_id").isNotNull && (WeatherModel.isValid || col("processed")))
     RuleBasedTrailClassifier.classifyExcluding(facts, WeatherModel.Anchor, col("processed"))
-      .orderBy("city_id")
   }
 
   /** Oracle: the classifier SQL verbatim, over the composed CTE pipeline.

@@ -48,7 +48,7 @@ class NativeKernelRuleSpec extends AnyFunSuite {
 
   test("composed cosine gets three native folds (divide stays Spark's)") {
     val df = vecs.where(col("id") === 1)
-      .select(SimilarityOps.cosineComposed(col("a"), col("b")).as("c"))
+      .select(VectorExpressionSpec.cosineComposed(col("a"), col("b")).as("c"))
     val opt = df.queryExecution.optimizedPlan.toString
     assert("dot_product".r.findAllIn(opt).size == 3, opt)
     assert(!opt.contains("aggregate("), opt)

@@ -422,13 +422,30 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = plan(df).split("== Initial Plan ==").head
     // the facts are scanned once; the processed cache is a flag on them
     assert(p.split("\n").count(_.contains("Scan parquet")) == 1, p)
-    // the classifier aggregation is the only hash exchange; the orderBy's
-    // range exchange is allowed
+    // the classifier aggregation is the only exchange
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
     assert("Exchange hashpartitioning\\(city_id".r.findAllIn(p).size == 1, p)
+    assertNoPresentationSort(p)
     assert(!p.contains("BroadcastExchange"), p)
     assert(!p.contains("Join"), p)
     assert(!p.contains("CartesianProduct"), p)
+  }
+
+  /** The labels feed a keyed upsert and the oracle compare sorts, so a
+    * flagship plan carries no range exchange (a sort's sample job and
+    * its own stage) and no Sort. */
+  private def assertNoPresentationSort(p: String): Unit = {
+    assert(!p.contains("rangepartitioning"), p)
+    assert("""\bSort\b""".r.findFirstIn(p).isEmpty, p)
+  }
+
+  test("q_classifier: one hash exchange, no range exchange, no sort") {
+    val df = SparkEntry.queries("q_classifier")(spark, dir)
+    df.collect()
+    val p = plan(df).split("== Initial Plan ==").head
+    assert("Exchange ".r.findAllIn(p).size == 1, p)
+    assert("Exchange hashpartitioning\\(city_id".r.findAllIn(p).size == 1, p)
+    assertNoPresentationSort(p)
   }
 
   test("hard negatives: one hash exchange total (single conditional aggregate)") {

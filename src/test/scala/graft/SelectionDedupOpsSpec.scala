@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -200,6 +201,35 @@ class SelectionDedupOpsSpec extends AnyFunSuite {
     assert(out(2L).getAs[Double]("dup_token_frac") === 0.6667)
   }
 
+  /** The retired two-pipeline explode/aggregate/join form of
+    * `TextOps.qualityRepetitionOf`: the parity reference. */
+  private def qualityRepetitionComposedOf(d: DataFrame): DataFrame = {
+    val base = d.select(col("doc_id"), graft.ops.TextOps.tokens.as("toks"))
+    def gramStats(gram: Column, pfx: String) =
+      base.select(col("doc_id"), explode(gram).as("g"))
+        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+        .groupBy(col("doc_id")).agg(
+          max(col("c")).as(s"${pfx}_top_c"),
+          sum(when(col("c") > 1, col("c")).otherwise(0L)).as(s"${pfx}_dup_c"),
+          sum(col("c")).as(s"${pfx}_n"))
+    val uni = gramStats(col("toks"), "u")
+    // try_element_at on the successor: a 1-token document probes index 2
+    // of a 1-element array, which THROWS under ANSI — the null →
+    // concat_ws skips it and yields the bare token, exactly the oracle's
+    // `|| coalesce(' ' || next, '')` (same convention as
+    // [[graft.ops.DedupOps.bigramShingles]])
+    val bi = gramStats(expr(
+      """transform(sequence(1, greatest(size(toks) - 1, 1)),
+        |  i -> concat_ws(' ', element_at(toks, i), try_element_at(toks, i + 1)))""".stripMargin), "b")
+    uni.join(bi, "doc_id")
+      .select(
+        col("doc_id"),
+        round(col("u_top_c").cast("double") / col("u_n"), 4).as("top_token_frac"),
+        round(col("u_dup_c").cast("double") / col("u_n"), 4).as("dup_token_frac"),
+        round(col("b_top_c").cast("double") / col("b_n"), 4).as("top_bigram_frac"))
+      .orderBy("doc_id")
+  }
+
   test("quality repetition: native per-row stats row-identical to the composed form") {
     // the round-18 native repetition_stats pass replaced the two
     // explode/aggregate pipelines; pin parity over the real corpus plus
@@ -213,7 +243,7 @@ class SelectionDedupOpsSpec extends AnyFunSuite {
       .select("doc_id", "text").unionByName(synth)
     val native = graft.ops.TextOps.qualityRepetitionOf(corpus)
       .collect().map(_.toString).sorted
-    val composed = graft.ops.TextOps.qualityRepetitionComposedOf(corpus)
+    val composed = qualityRepetitionComposedOf(corpus)
       .collect().map(_.toString).sorted
     assert(native.sameElements(composed))
   }

@@ -11,6 +11,7 @@ import graft.ops.SimilarityOps
   * checking, and bit-identity with the composed higher-order form.
   */
 class VectorExpressionSpec extends AnyFunSuite {
+  import VectorExpressionSpec.cosineComposed
 
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -19,6 +20,13 @@ class VectorExpressionSpec extends AnyFunSuite {
     * expression is tested against (same left-fold, bit-identical). */
   private def l2sqComposed(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
+
+  /** The retired composed ADC fold: the reference form
+    * [[graft.functions.AdcSum]] is tested against (same left-fold). */
+  private def adcFoldComposed(codes: Column, dtab: Column): Column =
+    aggregate(sequence(lit(0), lit(SimilarityOps.PqM - 1)), lit(0.0),
+      (acc, j) => acc + element_at(dtab,
+        (j * SimilarityOps.PqK + element_at(codes, j + 1) + 1).cast("int")))
 
   private def vecs = Seq(
     (1L, Seq(1.0, 0.0, 2.0), Seq(1.0, 0.0, 2.0)),   // identical → 1.0
@@ -58,7 +66,7 @@ class VectorExpressionSpec extends AnyFunSuite {
     val n = e.crossJoin(q)
       .where(
         cosine_sim($"vec", $"qv") =!=
-          SimilarityOps.cosineComposed($"vec", $"qv"))
+          cosineComposed($"vec", $"qv"))
       .count()
     assert(n == 0)
   }
@@ -86,7 +94,7 @@ class VectorExpressionSpec extends AnyFunSuite {
       "SELECT cosine_sim(array(1.0d), array(1.0d, 9.9d)) AS c").first()
     assert(out.isNullAt(0))
     val composed = Seq((Seq(1.0), Seq(1.0, 9.9))).toDF("a", "b")
-      .select(SimilarityOps.cosineComposed($"a", $"b").as("c")).first()
+      .select(cosineComposed($"a", $"b").as("c")).first()
     assert(composed.isNullAt(0))
   }
 
@@ -157,7 +165,7 @@ class VectorExpressionSpec extends AnyFunSuite {
     val df = rows.toDF("id", "codes", "dtab")
     val drift = df.select(
       (adc_sum(col("codes"), col("dtab"), k) -
-        SimilarityOps.adcFoldComposed(col("codes"), col("dtab"))).as("d"))
+        adcFoldComposed(col("codes"), col("dtab"))).as("d"))
       .agg(max(abs(col("d")))).first().getDouble(0)
     assert(drift == 0.0, s"native vs composed ADC drift: $drift")
     // a null code element poisons the sum to null, like acc + null
@@ -170,4 +178,14 @@ class VectorExpressionSpec extends AnyFunSuite {
       .select(adc_sum(col("codes"), col("dtab"), k).as("d")).first()
     assert(oob.isNullAt(0))
   }
+}
+
+object VectorExpressionSpec {
+
+  /** Composed higher-order cosine — six interpreted array walks; the
+    * reference form the native expression (and NativeKernelRuleSpec's
+    * rewrite) is tested against. */
+  def cosineComposed(a: Column, b: Column): Column =
+    SimilarityOps.dot(a, b) /
+      (sqrt(SimilarityOps.dot(a, a)) * sqrt(SimilarityOps.dot(b, b)))
 }
