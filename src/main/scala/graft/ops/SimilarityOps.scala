@@ -1509,8 +1509,6 @@ object SimilarityOps {
 
   // ---- incremental index maintenance --------------------------------------
 
-  private val incrCodesCache = IndexMemo.cache[(SparkSession, String), String]()
-
   /** `q_ann_incremental`: the PQ codes live in a TRANSACTIONAL
     * [[MergeTable]] and the index grows incrementally — wave 0 indexes
     * half the corpus, wave 1 encodes the other half against the FROZEN
@@ -1524,24 +1522,13 @@ object SimilarityOps {
     * table's keyed DELETE.
     */
   def annPqAdcIncremental(s: SparkSession, dir: String): DataFrame = {
-    val table = IndexMemo(incrCodesCache, (s, dir)) {
-      IndexStore.recordFixtureBuild("incr-pq-codes")
-      val appTag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "")
-      // dir-scoped like the events merge fixture: two sf dirs in one JVM
-      // must be two tables (see buildMergedEvents)
-      val t = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir", "/tmp"),
-        "graft-merge",
-        s"${IndexStore.scopedName("pqcodes", dir)}-$appTag").toString
-      MergeTable.dropTable(t)
+    val table = MergeTable.scratchTable(s, dir, "incr-pq-codes") { t =>
       val wide = pqCodesWide(s, dir)
       MergeTable.mergeUpsert(s, t, wide.where(pmod(col("vec_id"), lit(2)) === 0),
         Seq("vec_id"), Seq("vec_id"), txn = Some(("ann-ingest", 0L)))
       MergeTable.mergeUpsert(s, t, wide.where(pmod(col("vec_id"), lit(2)) === 1),
         Seq("vec_id"), Seq("vec_id"), txn = Some(("ann-ingest", 1L)))
-      t
     }
-    MergeTable.touchTable(table) // heartbeat vs the scratch-root sweep
     adcShortlistRerank(s, dir, cand = None,
       codesOverride = Some(MergeTable.read(s, table)))
   }

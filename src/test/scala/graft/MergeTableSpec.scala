@@ -1607,4 +1607,44 @@ class MergeTableSpec extends AnyFunSuite {
     assert(MergeTable.versionAsOf(t2, t1i) == 3L)
     assert(MergeTable.versionAsOf(t2, t1i - 1L) == 2L)
   }
+
+  test("scratchTable: one build per (tag, session, dir), one path per tag " +
+    "and per dir, a heartbeat on every access, stale siblings swept") {
+    val dirA = Files.createTempDirectory("scratch-a").toString
+    val dirB = Files.createTempDirectory("scratch-b").toString
+    val tag = s"spec-scratch-${System.nanoTime()}"
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def table(dir: String, tg: String = tag): String =
+      MergeTable.scratchTable(spark, dir, tg) { t =>
+        builds.incrementAndGet(); Files.createDirectories(Paths.get(t)); ()
+      }
+    val a = table(dirA)
+    assert(table(dirA) == a && builds.get == 1,
+      "the same (tag, session, dir) must build once")
+    val root = Paths.get(System.getProperty("java.io.tmpdir", "/tmp"), "graft-merge")
+    assert(Paths.get(a).getParent == root &&
+      Paths.get(a).getFileName.toString.startsWith(
+        s"$tag-${Paths.get(dirA).getFileName}-"))
+    val b = table(dirB)
+    val other = table(dirA, s"$tag-other")
+    assert(Set(a, b, other).size == 3 && builds.get == 3,
+      "two dirs and two tags must be separate tables, each built once")
+    // heartbeat: a memoized access refreshes a root older than the grace
+    val sevenHoursAgo = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 7L * 3600 * 1000)
+    Files.setLastModifiedTime(Paths.get(a), sevenHoursAgo)
+    val before = System.currentTimeMillis() - 1000L
+    assert(table(dirA) == a && builds.get == 3)
+    assert(Files.getLastModifiedTime(Paths.get(a)).toMillis >= before,
+      "the access must refresh the table root's mtime")
+    // sweep: the next build deletes a sibling past the 6 h grace and
+    // keeps the live tables
+    val stale = Files.createDirectories(root.resolve(s"$tag-stale"))
+    Files.setLastModifiedTime(stale, sevenHoursAgo)
+    val swept = table(dirB, s"$tag-sweep")
+    assert(!Files.exists(stale), "a sibling older than the grace must be swept")
+    assert(Seq(a, b, other, swept).forall(p => Files.isDirectory(Paths.get(p))))
+    Seq(a, b, other, swept).foreach(MergeTable.dropTable)
+    Seq(dirA, dirB).foreach(d => Files.delete(Paths.get(d)))
+  }
 }
