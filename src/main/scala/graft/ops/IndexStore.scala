@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   *  - IVF coarse quantizer: (cid, c_vec) — k rows;
   *  - PQ codebooks:        (j, cid, c_vec) — m·k rows;
-  *  - PQ codes:            (vec_id, j, code) — n·m rows, the 16×-compressed
+  *  - PQ codes:            (vec_id, codes[m]) — n rows, the 16×-compressed
   *                         corpus representation ADC scans at query time;
   *  - dedup decision tables (verified pairs, keep/drop) via [[loadOrBuild]].
   *
@@ -95,10 +95,12 @@ object IndexStore {
       events.put(name, "build")
       val tmp = Paths.get(cacheRoot,
         s"$dirName.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      build.write.mode("overwrite").parquet(tmp.toString)
+      val built = build
+      built.write.mode("overwrite").parquet(tmp.toString)
       publishStaged(tmp, target)
       dropStaleGenerations(name, dirName)
-      s.read.parquet(target.toString)
+      // the schema is known: reading it back infers nothing (no footer job)
+      s.read.schema(built.schema).parquet(target.toString)
     }
   }
 
@@ -245,21 +247,15 @@ object IndexStore {
   def loadPqCodes(s: SparkSession, out: String): DataFrame =
     s.read.parquet(s"$out/pq_codes")
 
-  /** Assign every corpus vector to its nearest LOADED centroid — the same
-    * argmax/tie contract as the in-session coarse cells (cos desc, then
+  /** Assign every corpus vector to its nearest LOADED centroid — the
+    * in-session coarse cells' kernel and tie contract (cos desc, then
     * cid), so a loaded quantizer reproduces assignments exactly.
     */
   def assignWithLoaded(s: SparkSession, dir: String, out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = graft.sources.Tables.read(s, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("vec"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("cid"))
-    e.crossJoin(broadcast(loadIvfCentroids(s, out)))
-      .withColumn("cos", SimilarityOps.cosine(col("vec"), col("c_vec")))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
+    SimilarityOps.kmeansAssign(e, SimilarityOps.centroidCands(loadIvfCentroids(s, out)))
       .select(col("vec_id"), col("cid").as("cell"))
   }
 }

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{
+  ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.sources.Tables
 import TextOps.hash60Sql
@@ -419,10 +421,10 @@ object SimilarityOps {
 
   // ---- label-centroid assignment -----------------------------------------
 
-  /** Per-label centroids (posexplode → per-dim avg, ROUNDED to 6dp so both
-    * engines proceed from identical centroids), collected back to arrays.
+  /** Per-label centroids (per-dim avg, ROUNDED to 6dp so both engines
+    * proceed from identical centroids; the [[meanUpdate]] of k-means).
     * A trained artifact like [[kmeansCentroids]], so it is built ONCE per
-    * (session, input) behind [[IndexMemo]] — the full-corpus posexplode is
+    * (session, input) behind [[IndexMemo]] — the full-corpus mean is
     * the expensive half of `q_centroid_assign`; re-deriving it per run pays
     * that twice for a 10-row table every consumer could broadcast.
     */
@@ -431,15 +433,8 @@ object SimilarityOps {
 
   private def centroids(s: SparkSession, dir: String): DataFrame =
     IndexMemo(labelCentroidCache, (s, dir))(
-      emb(s, dir)
-        .select(col("label"), posexplode(col("vec")).as(Seq("d", "x")))
-        .groupBy(col("label").as("c_label"), col("d"))
-        .agg(round(avg(col("x")), 6).as("cx"))
-        .groupBy(col("c_label"))
-        .agg(array_sort(collect_list(struct(col("d"), col("cx")))).as("pairs"))
-        .select(
-          col("c_label"),
-          transform(col("pairs"), p => p.getField("cx")).as("c_vec"))
+      meanUpdate(emb(s, dir).withColumnRenamed("label", "c_label"),
+        Seq("c_label"), "vec", Dim)
         .localCheckpoint())
 
   /** Every vector's nearest centroid (its IVF cell). */
@@ -482,7 +477,7 @@ object SimilarityOps {
     * tie-break (cos desc, cid) lives in ONE place next to its oracle.
     */
   private[graft] def coarseCells(s: SparkSession, dir: String): DataFrame =
-    kmeansAssign(emb(s, dir), kmeansCentroids(s, dir))
+    kmeansAssign(emb(s, dir), kmeansCands(s, dir))
       .select(col("vec_id"), col("vec"), col("cid").as("cell"))
 
   /** (query_id, q_vec, probe_cell): each query's nprobe nearest cells —
@@ -524,33 +519,65 @@ object SimilarityOps {
     * iterations): seeds = the first k vectors by id, centroids re-averaged
     * per dim and ROUNDED to 6dp each round so the DuckDB oracle (same
     * rounds unrolled) proceeds from identical values. The index-build op
-    * behind a real IVF; also the engine's demonstration of iterative ML
-    * discipline — lineage truncated per round (see nearDupClusters).
+    * behind a real IVF.
     *
-    * Scale: per round, one broadcast of k centroids + one shuffle for the
-    * per-(cluster, dim) averages. Assignment is map-side.
+    * Scale: per round, one map-side assignment pass (the k centroids ride
+    * in the plan as the [[nearest]] candidate literal), one shuffle for the
+    * per-cell means (a fixed-width HashAggregate, k rows out), and a
+    * k-row collect that becomes the next round's literal — which also cuts
+    * the lineage. Two Spark jobs per round.
     */
-  private def kmeansAssign(e: DataFrame, cents: DataFrame): DataFrame =
-    // Argmax as ONE struct-extreme aggregate (the hardNegatives device),
-    // not a row_number window: the window form shuffled the ENTIRE k-way
-    // crossJoin — k rows per vector, each carrying BOTH the vector and
-    // the candidate centroid (~16× the bytes of the input) — through a
-    // vec_id exchange just to keep rank 1. The aggregate form collapses
-    // the k candidates map-side (partial max per vec_id before the
-    // exchange), so the shuffle moves one row per vector and no centroid
-    // payload (guide §2.3 "aggregate before you shuffle"). Ordering is
-    // the same (cos desc, then cid asc, encoded as max over
-    // (cos, -cid)); vec rides in the struct and is never reached by the
-    // comparator (cid is unique per candidate). LlmOpsSpec "kmeans
-    // assignment: aggregate argmax equals the retired window form" pins it.
-    e.crossJoin(broadcast(cents))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(
-        cosine(col("vec"), col("c_vec")).as("cos"),
-        (-col("cid")).as("ncid"),
-        col("vec").as("vec"))).as("best"))
-      .select(col("vec_id"), col("best.vec").as("vec"),
-        (-col("best.ncid")).as("cid"), col("best.cos").as("cos"))
+  private[graft] def kmeansAssign(e: DataFrame, cands: Column): DataFrame =
+    // ONE projection, no exchange: the native kernel scores the k
+    // candidates and keeps the best with the (cos desc, cid asc) order the
+    // retired max(struct(cos, -cid, vec)) aggregate and row_number window
+    // encoded (LlmOpsSpec "nearest-centroid kernel ..." pins all three
+    // equal). The vector never enters an aggregate buffer.
+    e.withColumn("best", graft.functions.VectorExpressions.nearest(col("vec"), cands, "cosine"))
+      .select(col("vec_id"), col("vec"), col("best.cid").as("cid"),
+        col("best.score").as("cos"))
+
+  /** (cid, c_vec) rows → the candidate literal [[kmeansAssign]] scores.
+    * Never empty: a vector always elects a cell, and a non-empty literal
+    * lets the planner see `cid` as non-null (no inferred `isnotnull`
+    * filter that would evaluate the kernel a second time). */
+  private def candidates(cents: Seq[Row]): Column = {
+    require(cents.nonEmpty, "no centroids to assign against")
+    graft.functions.VectorExpressions.candidates(cents)
+  }
+
+  /** A (cid, c_vec) centroid frame, collected, as that literal. */
+  private[graft] def centroidCands(cents: DataFrame): Column =
+    candidates(centroidRows(cents).toSeq)
+
+  private val CentroidSchema = StructType(Seq(
+    StructField("cid", LongType, nullable = false),
+    StructField("c_vec", ArrayType(DoubleType))))
+
+  private def centroidRows(cents: DataFrame): Array[Row] =
+    cents.select(col("cid").cast("long"), col("c_vec")).collect()
+
+  /** The Lloyd update: per-`keys` mean of every coordinate of `v`, 6dp.
+    * ONE groupBy with `width` fixed-width avg(v[d]) aggregates — a
+    * HashAggregate with map-side partials and one shuffle; no posexplode,
+    * no (key, d) regroup, no collect_list. A null coordinate is skipped by
+    * its avg, as the per-coordinate groupBy skipped it, and a group whose
+    * every vector is null yields no centroid, as before (the count is
+    * checked after the aggregate: a filter on `v` itself would re-run the
+    * scan's cast). At width 64 the partial buffer (129 fields) is over
+    * Spark's whole-stage field limit, so the kmeans update runs unfused;
+    * the PQ update (width 4) is whole-stage codegen'd.
+    */
+  private def meanUpdate(assigned: DataFrame, keys: Seq[String], v: String,
+      width: Int): DataFrame =
+    assigned.groupBy(keys.map(col): _*)
+      .agg(count(col(v)).as("n_vec"), array((0 until width).map(d =>
+        round(avg(get(col(v), lit(d))), 6)): _*).as("c_vec"))
+      .where(col("n_vec") > 0)
+      .drop("n_vec")
+
+  private def widthOf(cents: Seq[Row]): Int =
+    cents.map(r => if (r.isNullAt(1)) 0 else r.getSeq[Any](1).length).max
 
   /** The trained quantizer (cid, c_vec), built ONCE per (session, input)
     * and persisted — [[kmeans]], [[annIvf]] and [[annRecall]] all read the
@@ -559,40 +586,74 @@ object SimilarityOps {
     * materialized centroids. The cache is k rows — trivially bounded.
     */
   private val centroidCache =
-    IndexMemo.cache[(SparkSession, String), DataFrame]()
+    IndexMemo.cache[(SparkSession, String), (DataFrame, Seq[Row])]()
 
   /** Artifact name carrying the sf-dir tag — see the DedupOps twin. */
   private def artifactName(base: String, dir: String): String =
     IndexStore.scopedName(base, dir)
 
-  private[graft] def kmeansCentroids(s: SparkSession, dir: String): DataFrame =
-    IndexMemo(centroidCache, (s, dir))(
-      IndexStore.loadOrBuild(s, artifactName("ivf-centroids", dir),
-        s"${Tables.fileIdent(dir, "embeddings")}|k=$KmeansK|iters=$KmeansIters")(
-        computeKmeansCentroids(s, dir)))
+  /** Identity suffix naming how the quantizers are trained: artifacts the
+    * retired crossJoin/window training wrote are a different build, so
+    * they miss instead of being served to this code. */
+  private val TrainForm = "|train=kernel"
 
-  private def computeKmeansCentroids(s: SparkSession, dir: String): DataFrame = {
-      val e = emb(s, dir)
-
-      def update(assigned: DataFrame): DataFrame =
-        assigned
-          .select(col("cid"), posexplode(col("vec")).as(Seq("d", "x")))
-          .groupBy(col("cid"), col("d"))
-          .agg(round(avg(col("x")), 6).as("cx"))
-          .groupBy(col("cid"))
-          .agg(array_sort(collect_list(struct(col("d"), col("cx")))).as("pairs"))
-          .select(col("cid"), transform(col("pairs"), p => p.getField("cx")).as("c_vec"))
-
-      var cents = e.where(col("vec_id") < KmeansK)
-        .select(col("vec_id").as("cid"), col("vec").as("c_vec"))
-        .localCheckpoint()
-      for (_ <- 1 to KmeansIters)
-        cents = update(kmeansAssign(e, cents)).localCheckpoint()
-      cents
+  /** A trained quantizer through [[IndexStore.loadOrBuild]]: the artifact
+    * scan, and its rows for the candidate literal — the training rows on
+    * a build, the collected artifact on a load (parquet doubles round-trip
+    * exactly, so both give the same literal). */
+  private def trainedArtifact(s: SparkSession, name: String, identity: String,
+      schema: StructType)(train: => Seq[Row])(rowsOf: DataFrame => Seq[Row])
+      : (DataFrame, Seq[Row]) = {
+    var built: Option[Seq[Row]] = None
+    val df = IndexStore.loadOrBuild(s, name, identity) {
+      val rows = train
+      built = Some(rows)
+      localFrame(s, rows, schema)
+    }
+    (df, built.getOrElse(rowsOf(df)))
   }
 
+  private def kmeansTrained(s: SparkSession, dir: String): (DataFrame, Seq[Row]) =
+    IndexMemo(centroidCache, (s, dir))(
+      trainedArtifact(s, artifactName("ivf-centroids", dir),
+        s"${Tables.fileIdent(dir, "embeddings")}|k=$KmeansK|iters=$KmeansIters$TrainForm",
+        CentroidSchema)(computeKmeansCentroids(s, dir))(centroidRows(_).toSeq))
+
+  private[graft] def kmeansCentroids(s: SparkSession, dir: String): DataFrame =
+    kmeansTrained(s, dir)._1
+
+  /** The trained centroids as the [[kmeansAssign]] candidate literal; its
+    * rows are kept with the artifact, so building a query plan over the
+    * quantizer runs no job. */
+  private[graft] def kmeansCands(s: SparkSession, dir: String): Column =
+    candidates(kmeansTrained(s, dir)._2)
+
+  /** (vec_id, vec, nvec) of the first vectors by id: they seed both
+    * quantizers (k-means takes vec_id < KmeansK, PQ the subvectors of
+    * vec_id < PqK), so a cold IVF-PQ build reads them in one job. */
+  private val seedCache = IndexMemo.cache[(SparkSession, String), Seq[Row]]()
+
+  private def seedVectors(s: SparkSession, dir: String): Seq[Row] =
+    IndexMemo(seedCache, (s, dir))(
+      pqNormalized(s, dir).where(col("vec_id") < math.max(KmeansK, PqK))
+        .select(col("vec_id"), col("vec"), col("nvec")).collect().toSeq)
+
+  private def computeKmeansCentroids(s: SparkSession, dir: String): Seq[Row] = {
+    val e = emb(s, dir)
+    var cents = seedVectors(s, dir).filter(_.getLong(0) < KmeansK)
+      .map(r => Row(r.getLong(0), r.get(1)))
+    for (_ <- 1 to KmeansIters)
+      cents = meanUpdate(kmeansAssign(e, candidates(cents)), Seq("cid"), "vec",
+        widthOf(cents)).collect().toSeq
+    cents.sortBy(_.getLong(0))
+  }
+
+  /** Driver-side rows as a one-partition frame (one artifact file). */
+  private def localFrame(s: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+
   def kmeans(s: SparkSession, dir: String): DataFrame =
-    kmeansAssign(emb(s, dir), kmeansCentroids(s, dir))
+    kmeansAssign(emb(s, dir), kmeansCands(s, dir))
       .groupBy(col("cid"))
       .agg(
         count(lit(1)).as("n_members"),
@@ -649,7 +710,7 @@ object SimilarityOps {
     */
   def clusterSample(s: SparkSession, dir: String, m: Int = 3): DataFrame = {
     val w = Window.partitionBy(col("cid")).orderBy(col("cos").desc, col("vec_id"))
-    kmeansAssign(emb(s, dir), kmeansCentroids(s, dir))
+    kmeansAssign(emb(s, dir), kmeansCands(s, dir))
       .withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= m)
       .select(col("cid"), col("rank"), col("vec_id"),
@@ -712,7 +773,7 @@ object SimilarityOps {
     * One map-side assignment pass + one k-row aggregate.
     */
   def quantizerBaselineStats(s: SparkSession, dir: String): DataFrame =
-    kmeansAssign(emb(s, dir), kmeansCentroids(s, dir))
+    kmeansAssign(emb(s, dir), kmeansCands(s, dir))
       .select(col("cid"), residIntCol.as("resid_i"))
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n"), sum(col("resid_i")).as("resid_sum"))
@@ -726,7 +787,7 @@ object SimilarityOps {
     * a conditional aggregate, not two passes), one k-row shuffle.
     */
   def quantizerDrift(s: SparkSession, dir: String): DataFrame = {
-    val a = kmeansAssign(emb(s, dir), kmeansCentroids(s, dir))
+    val a = kmeansAssign(emb(s, dir), kmeansCands(s, dir))
       .select(col("cid"), pmod(col("vec_id"), lit(2)).as("win"),
         residIntCol.as("resid_i"))
     val g = a.groupBy(col("cid")).agg(
@@ -795,8 +856,9 @@ object SimilarityOps {
     *     (the drifted window is the new truth for that region) with the
     *     same spherical-Lloyd discipline as [[kmeansCentroids]]: seeds =
     *     first k_stale by vec_id, fixed `iters`, per-dim means rounded
-    *     6dp, per-round localCheckpoint. The retrained centroids REUSE
-    *     the stale cids (ascending), so the cid space — and every
+    *     6dp, each round's k_stale centroids collected to the driver.
+    *     The retrained centroids REUSE the stale cids (ascending), so the
+    *     cid space — and every
     *     downstream consumer keyed on it — is stable.
     *  3. Re-assign the affected vectors (stale cells' base members +
     *     every arrival) against the UPDATED centroid set and MERGE the
@@ -804,8 +866,8 @@ object SimilarityOps {
     *     a replayed retrain batch is a no-op by the same watermark as
     *     any ingest.
     *
-    * Scale: assignments are map-side against broadcast k-row centroid
-    * frames; each Lloyd round shuffles (cell, dim) partial sums;
+    * Scale: assignments are map-side against the k-row centroid
+    * literal; each Lloyd round shuffles per-cell partial sums;
     * the merge touches only key-overlapping files. Nothing here is
     * O(corpus) beyond the two assignment scans the monitor itself needs.
     */
@@ -819,10 +881,11 @@ object SimilarityOps {
       thresholdBp: Long = StalenessThresholdBp,
       minSupport: Long = StalenessMinSupport,
       txn: Option[(String, Long)] = None): RetrainResult = {
-    val aBase = kmeansAssign(base, cents)
+    val centRows = centroidRows(cents).toSeq
+    val aBase = kmeansAssign(base, candidates(centRows))
       .select(col("vec_id"), col("vec"), col("cid"), residIntCol.as("resid_i"))
       .localCheckpoint()
-    val aArr = kmeansAssign(arrivals, cents)
+    val aArr = kmeansAssign(arrivals, candidates(centRows))
       .select(col("vec_id"), col("vec"), col("cid"), residIntCol.as("resid_i"))
       .localCheckpoint()
     try {
@@ -849,57 +912,29 @@ object SimilarityOps {
         val kStale = stale.size
         // seeds: first k_stale drifted vectors by id, mapped onto the
         // stale cids ascending — cid space stays stable
-        val seedIds = driftedMembers.select(col("vec_id"))
-          .orderBy(col("vec_id")).limit(kStale)
-          .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().sorted
-        require(seedIds.length == kStale,
-          s"drifted window has ${seedIds.length} members for $kStale stale " +
+        val seeds = driftedMembers.orderBy(col("vec_id")).limit(kStale)
+          .collect().sortBy(_.getLong(0))
+        require(seeds.length == kStale,
+          s"drifted window has ${seeds.length} members for $kStale stale " +
             "cells — not enough data to re-fit; widen the window")
-        val cidOf = seedIds.zip(stale).toMap
-        def update(assigned: DataFrame): DataFrame = assigned
-          .select(col("cid"), posexplode(col("vec")).as(Seq("d", "x")))
-          .groupBy(col("cid"), col("d"))
-          .agg(round(avg(col("x")), 6).as("cx"))
-          .groupBy(col("cid"))
-          .agg(array_sort(collect_list(struct(col("d"), col("cx")))).as("pairs"))
-          .select(col("cid"),
-            transform(col("pairs"), p => p.getField("cx")).as("c_vec"))
-        // seed id → stale cid as a k-term CASE (no UDF; k is bounded)
-        val cidCol = cidOf.tail.foldLeft(
-          when(col("vec_id") === lit(cidOf.head._1), lit(cidOf.head._2))) {
-          case (acc, (id, cid)) => acc.when(col("vec_id") === lit(id), lit(cid))
-        }
-        var refit = driftedMembers
-          .where(col("vec_id").isin(seedIds.toSeq: _*))
-          .select(cidCol.as("cid"), col("vec").as("c_vec"))
-          .localCheckpoint()
+        var refit: Seq[Row] = seeds.toSeq.zip(stale).map { case (r, cid) => Row(cid, r.get(1)) }
         for (_ <- 1 to iters) {
           // a cell that won no member this round would vanish from the
           // mean-update's groupBy, silently SHRINKING the centroid set —
           // carry its previous centroid forward instead: the cid space
           // is documented stable and downstream consumers key on it
-          val next = update(kmeansAssign(driftedMembers, refit))
-          refit = refit.alias("p").join(next.alias("n"),
-            col("p.cid") === col("n.cid"), "left")
-            .select(col("p.cid").as("cid"),
-              coalesce(col("n.c_vec"), col("p.c_vec")).as("c_vec"))
-            .localCheckpoint()
+          val next = meanUpdate(kmeansAssign(driftedMembers, candidates(refit)),
+            Seq("cid"), "vec", widthOf(refit)).collect().map(r => r.getLong(0) -> r).toMap
+          refit = refit.map(r => next.getOrElse(r.getLong(0), r))
         }
-        // the carry-forward above makes this structural; keep it as the
-        // loud fail-stop the cid-stability contract demands
-        require(refit.count() == kStale.toLong,
-          s"retrain must yield exactly $kStale centroids for the stale " +
-            "cells — the cid space is pinned")
-
-        val updated = cents.where(!col("cid").isin(stale: _*))
-          .unionByName(refit)
-          .localCheckpoint()
+        val updatedRows = centRows.filterNot(r => staleSet(r.getLong(0))) ++ refit
+        val updated = localFrame(s, updatedRows.sortBy(_.getLong(0)), CentroidSchema)
 
         // ---- re-encode affected vectors, txn-guarded ------------------------
         val affected = aBase.where(col("cid").isin(stale: _*))
           .select(col("vec_id"), col("vec"))
           .unionByName(aArr.select(col("vec_id"), col("vec")))
-        val reassigned = kmeansAssign(affected, updated)
+        val reassigned = kmeansAssign(affected, candidates(updatedRows))
           .select(col("vec_id"), col("cid"), residIntCol.as("resid_bp"))
         val committed = MergeTable.mergeUpsert(s, assignTable, reassigned,
           Seq("vec_id"), Seq("vec_id"), txn = txn)
@@ -1084,7 +1119,7 @@ object SimilarityOps {
     // once per call, when this frame is built (recomputed from parquet on
     // every call — nothing crosses runs); all three consumers read the
     // checkpoint (guide §3.3: materialize to stop duplicate subtrees).
-    val assigned = kmeansAssign(emb(s, dir), kmeansCentroids(s, dir))
+    val assigned = kmeansAssign(emb(s, dir), kmeansCands(s, dir))
       .select(col("vec_id"), col("vec"), col("cid"))
       .localCheckpoint()
     val earlier = assigned.select(
@@ -1129,7 +1164,7 @@ object SimilarityOps {
     */
   def knnGraph(s: SparkSession, dir: String): DataFrame = {
     // same three-consumer checkpoint rationale as [[semDedup]]
-    val assigned = kmeansAssign(emb(s, dir), kmeansCentroids(s, dir))
+    val assigned = kmeansAssign(emb(s, dir), kmeansCands(s, dir))
       .select(col("vec_id"), col("vec"), col("cid"))
       .localCheckpoint()
     val other = assigned.select(
@@ -1298,68 +1333,112 @@ object SimilarityOps {
     * codebooks. Output: (j, cid, c_vec).
     */
   private val codebookCache =
-    IndexMemo.cache[(SparkSession, String), DataFrame]()
+    IndexMemo.cache[(SparkSession, String), (DataFrame, Seq[Row])]()
 
-  private def pqAssign(sub: DataFrame, cents: DataFrame): DataFrame = {
-    // nearest codebook entry by L2, ties to the smaller cid
-    val w = Window.partitionBy(col("vec_id"), col("j"))
-      .orderBy(col("d2").asc, col("cid"))
-    sub.join(broadcast(cents), "j")
-      .withColumn("d2", l2sq(col("sv"), col("c_vec")))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("vec_id"), col("j"), col("sv"), col("cid"), col("d2"))
+  /** Nearest codeword per (vec_id, j) by squared L2, ties to the smaller
+    * cid — the [[graft.functions.NearestCentroid]] kernel against subspace
+    * j's codebook, one map-side projection (no join on j, no
+    * (vec_id, j) window). `books` is the per-j candidate array
+    * ([[codebookCands]]).
+    */
+  private[graft] def pqAssign(sub: DataFrame, books: Column): DataFrame =
+    sub.withColumn("best", graft.functions.VectorExpressions
+        .nearest(col("sv"), books.getItem(col("j")), "l2"))
+      .select(col("vec_id"), col("j"), col("sv"), col("best.cid").as("cid"))
+
+  /** (j, cid, c_vec) rows → one candidate array per subspace j. */
+  private def codebookCands(books: Seq[Row]): Column = {
+    val byJ = books.groupBy(_.getInt(0))
+    require((0 until PqM).forall(byJ.contains), "a PQ subspace has no codebook")
+    graft.functions.VectorExpressions.candidateSets((0 until PqM).map(j =>
+      byJ(j).map(r => Row(r.getLong(1), r.get(2)))))
   }
+
+  private val CodebookSchema =
+    StructType(StructField("j", IntegerType, nullable = false) +: CentroidSchema.fields.toSeq)
+
+  private def codebookRows(books: DataFrame): Array[Row] =
+    books.select(col("j").cast("int"), col("cid").cast("long"), col("c_vec")).collect()
+
+  private def pqTrained(s: SparkSession, dir: String): (DataFrame, Seq[Row]) =
+    IndexMemo(codebookCache, (s, dir))(
+      trainedArtifact(s, artifactName("pq-codebooks", dir),
+        s"${Tables.fileIdent(dir, "embeddings")}|m=$PqM|k=$PqK|iters=$PqIters$TrainForm",
+        CodebookSchema)(computePqCodebooks(s, dir))(codebookRows(_).toSeq))
 
   private[graft] def pqCodebooks(s: SparkSession, dir: String): DataFrame =
-    IndexMemo(codebookCache, (s, dir))(
-      IndexStore.loadOrBuild(s, artifactName("pq-codebooks", dir),
-        s"${Tables.fileIdent(dir, "embeddings")}|m=$PqM|k=$PqK|iters=$PqIters")(
-        computePqCodebooks(s, dir)))
+    pqTrained(s, dir)._1
 
-  private def computePqCodebooks(s: SparkSession, dir: String): DataFrame = {
-      val sub = pqSubvectors(s, dir)
-      def update(assigned: DataFrame): DataFrame =
-        assigned
-          .select(col("j"), col("cid"), posexplode(col("sv")).as(Seq("d", "x")))
-          .groupBy(col("j"), col("cid"), col("d"))
-          .agg(round(avg(col("x")), 6).as("cx"))
-          .groupBy(col("j"), col("cid"))
-          .agg(array_sort(collect_list(struct(col("d"), col("cx")))).as("pairs"))
-          .select(col("j"), col("cid"),
-            transform(col("pairs"), p => p.getField("cx")).as("c_vec"))
-      var cents = sub.where(col("vec_id") < PqK)
-        .select(col("j"), col("vec_id").as("cid"), col("sv").as("c_vec"))
-        .localCheckpoint()
-      for (_ <- 1 to PqIters)
-        cents = update(pqAssign(sub, cents)).localCheckpoint()
-      cents
+  /** The codebooks as the per-subspace [[pqAssign]] candidate literal. */
+  private[graft] def pqCands(s: SparkSession, dir: String): Column =
+    codebookCands(pqTrained(s, dir)._2)
+
+  /** Same Lloyd loop as [[computeKmeansCentroids]], per subspace: each
+    * round is one map-side [[pqAssign]] pass, one (j, cid) mean shuffle,
+    * and an m·k-row collect. */
+  private def computePqCodebooks(s: SparkSession, dir: String): Seq[Row] = {
+    val sub = pqSubvectors(s, dir)
+    // subvector j of a seed is a copy of nvec[j·SubDim, (j+1)·SubDim), as
+    // `slice` takes it
+    var books = for {
+      r <- seedVectors(s, dir) if r.getLong(0) < PqK
+      nvec = r.getSeq[Any](2)
+      j <- 0 until PqM
+    } yield Row(j, r.getLong(0), nvec.slice(j * SubDim, (j + 1) * SubDim))
+    for (_ <- 1 to PqIters)
+      books = meanUpdate(pqAssign(sub, codebookCands(books)), Seq("j", "cid"), "sv",
+        SubDim).collect().toSeq
+    books.sortBy(r => (r.getInt(0), r.getLong(1)))
   }
 
-  /** Encoded corpus (vec_id, j, cid) — the PQ codes table, built once per
-    * (session, input) and persisted like the codebooks: both ADC consumers
+  /** Encoded corpus (vec_id, codes[m]) with codes[j] = the nearest
+    * codeword of subspace j — the PQ codes table, built once per (session,
+    * input) and persisted like the codebooks: both ADC consumers
     * ([[annPqAdc]], [[annIvfPq]]) read the same 16-codes-per-vector table
-    * instead of re-encoding the corpus.
+    * instead of re-encoding the corpus. THIS is the production layout — m
+    * small ints per vector, the 16×-compressed corpus a 100 TB ADC scan
+    * reads — and the encode writes it directly, so no consumer folds the
+    * long form back per vector.
     */
   private val codesCache =
     IndexMemo.cache[(SparkSession, String), DataFrame]()
 
-  private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
+  private def pqCodesWide(s: SparkSession, dir: String): DataFrame =
     IndexMemo(codesCache, (s, dir))(
       IndexStore.loadOrBuild(s, artifactName("pq-codes", dir),
-        s"${Tables.fileIdent(dir, "embeddings")}|m=$PqM|k=$PqK|iters=$PqIters")(
-        pqAssign(pqSubvectors(s, dir), pqCodebooks(s, dir))
-          .select(col("vec_id"), col("j"), col("cid"))))
+        s"${Tables.fileIdent(dir, "embeddings")}|m=$PqM|k=$PqK|iters=$PqIters$TrainForm")(
+        pqEncode(s, dir)))
 
-  /** (vec_id, j, sv): each vector L2-NORMALIZED then exploded into its m
-    * subvectors. Normalization first makes squared-L2 order-equivalent to
-    * cosine (‖a−b‖² = 2 − 2·cos on the unit sphere), so ADC ranks agree
-    * with the cosine ground truth the other ANN variants use.
+  /** The long (vec_id, j, cid) normal form of the codes table, the shape
+    * the oracle and the saved index use: a map-side posexplode. */
+  private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
+    pqCodesWide(s, dir)
+      .select(col("vec_id"), posexplode(col("codes")).as(Seq("j", "cid")))
+
+  /** The codes build [[pqCodesWide]] persists: ONE projection over the
+    * normalized vectors, m [[pqAssign]]-kernel elections per row against
+    * the trained codebooks (no explode, no window, no regroup). */
+  private[graft] def pqEncode(s: SparkSession, dir: String): DataFrame = {
+    val books = pqCands(s, dir)
+    pqNormalized(s, dir).select(col("vec_id"),
+      array((0 until PqM).map(j => graft.functions.VectorExpressions
+        .nearest(subvec(col("nvec"), j), books.getItem(j), "l2")
+        .getField("cid")): _*).as("codes"))
+  }
+
+  /** (vec_id, vec, nvec): each vector and its L2-NORMALIZED form. Normalization first makes
+    * squared-L2 order-equivalent to cosine (‖a−b‖² = 2 − 2·cos on the unit
+    * sphere), so ADC ranks agree with the cosine ground truth the other
+    * ANN variants use.
     */
-  private def pqSubvectors(s: SparkSession, dir: String): DataFrame =
+  private def pqNormalized(s: SparkSession, dir: String): DataFrame =
     emb(s, dir)
       .withColumn("nrm", sqrt(dot(col("vec"), col("vec"))))
-      .withColumn("nvec", transform(col("vec"), x => x / col("nrm")))
+      .select(col("vec_id"), col("vec"), transform(col("vec"), x => x / col("nrm")).as("nvec"))
+
+  /** (vec_id, j, sv): [[pqNormalized]] exploded into its m subvectors. */
+  private[graft] def pqSubvectors(s: SparkSession, dir: String): DataFrame =
+    pqNormalized(s, dir)
       .select(
         col("vec_id"),
         explode(array((0 until PqM).map(j =>
@@ -1379,76 +1458,40 @@ object SimilarityOps {
   def annPqAdc(s: SparkSession, dir: String): DataFrame =
     adcShortlistRerank(s, dir, cand = None)
 
-  /** Per-query ADC lookup table: d2 from every query subvector to every
-    * codebook entry (q × m × k rows — broadcast side).
-    */
-  private def pqLut(s: SparkSession, dir: String): DataFrame =
-    pqSubvectors(s, dir).where(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("j"), col("sv").as("q_sv"))
-      .join(broadcast(pqCodebooks(s, dir)), "j")
-      .select(col("query_id"), col("j"), col("cid"),
-        l2sq(col("q_sv"), col("c_vec")).as("d2"))
-
-  /** Wide form of the codes table: (vec_id, codes[m]) with codes[j] = the
-    * j-th subspace's codebook id. THIS is the production layout — m bytes
-    * per vector (16 here), the 16×-compressed corpus a 100 TB ADC scan
-    * reads — while the long (vec_id, j, cid) artifact stays the
-    * oracle-friendly normal form. One n-group fold over the loaded
-    * artifact, derived per plan (bounded: n rows × m entries).
-    */
-  private val codesWideCache =
-    IndexMemo.cache[(SparkSession, String), DataFrame]()
-
-  private def pqCodesWide(s: SparkSession, dir: String): DataFrame =
-    // memoized + persisted: both ADC consumers re-execute per bench
-    // sample, and without the persist each execution re-folds the codes
-    // artifact (an n-group aggregate) and re-broadcasts the result —
-    // repeated-execution cost pinned flat by caching the n-row (m ints
-    // each) fold output once per (session, input)
-    IndexMemo(codesWideCache, (s, dir))(
-      pqCodes(s, dir)
-        .groupBy(col("vec_id"))
-        .agg(array_sort(collect_list(struct(col("j"), col("cid")))).as("parts"))
-        .select(col("vec_id"),
-          transform(col("parts"), p => p.getField("cid")).as("codes"))
-        .persist())
-
   /** Wide per-query ADC lookup table: (query_id, dtab[m·k]) with
     * dtab[j·k + cid] = d2(query subvector j, codebook entry cid) — the
     * flat distance table a real ADC kernel indexes. q rows, broadcast.
     *
-    * Built over a DENSE (query, j, cid) spine, not the codebook rows
-    * alone: k-means may STARVE a codebook entry (the update step emits no
-    * row for an empty cluster), and a flat table with a silent gap shifts
-    * every lookup after it. Missing entries hold an inert sentinel
+    * One projection over the q query vectors against the DENSE codebook
+    * literal (k slots per subspace), not a join on j into a per-query
+    * regroup: k-means may STARVE a codebook entry (the update step emits
+    * no row for an empty cluster), and a flat table with a silent gap
+    * shifts every lookup after it. A starved slot holds an inert sentinel
     * (1e18) — never read, because [[pqAssign]] only ever codes against
     * EXISTING centroids, so no `codes[j]` can reference a starved cid; a
     * sentinel (not null) keeps both engines' list semantics trivially
-    * index-aligned.
+    * index-aligned. Each d2 is the same `l2_sq` of the same subvector and
+    * codeword as before, so the table is bit-identical.
     */
   private val lutWideCache =
     IndexMemo.cache[(SparkSession, String), DataFrame]()
 
   private def pqLutWide(s: SparkSession, dir: String): DataFrame =
-    // memoized + persisted like [[pqCodesWide]]: q rows of m·k doubles,
-    // rebuilt (codebook join + fold + densify) and re-broadcast on every
-    // execution otherwise
-    IndexMemo(lutWideCache, (s, dir))(pqLutWideUncached(s, dir).persist())
-
-  private def pqLutWideUncached(s: SparkSession, dir: String): DataFrame =
-    pqLut(s, dir)
-      .groupBy(col("query_id"))
-      .agg(map_from_entries(collect_list(struct(
-        (col("j") * PqK + col("cid")).cast("int").as("slot"),
-        col("d2").as("d2")))).as("mp"))
-      // densify IN the projection (no spine join, no extra exchange):
-      // every slot 0..m·k−1 resolves through the map, absent slots take
-      // the sentinel. try_element_at, NOT element_at: under ANSI (this
-      // engine's default) a missing map key THROWS before coalesce runs —
-      // exactly on the starved-centroid case this densification exists for
-      .select(col("query_id"),
-        transform(sequence(lit(0), lit(PqM * PqK - 1)),
-          i => coalesce(try_element_at(col("mp"), i), lit(1e18))).as("dtab"))
+    // memoized + persisted: q rows of m·k doubles, re-scanned and
+    // re-broadcast on every execution otherwise
+    IndexMemo(lutWideCache, (s, dir)) {
+      val books = pqTrained(s, dir)._2.groupBy(_.getInt(0))
+        .map { case (j, rows) => j -> rows.map(r => r.getLong(1).toInt -> r.get(2)).toMap }
+      val dense = org.apache.spark.sql.graftbridge.Bridge.column(
+        org.apache.spark.sql.catalyst.expressions.Literal.create(
+          (0 until PqM).map(j => (0 until PqK).map(cid => books.get(j).flatMap(_.get(cid)).orNull)),
+          ArrayType(ArrayType(ArrayType(DoubleType)))))
+      pqNormalized(s, dir).where(col("vec_id") < NQueries)
+        .select(col("vec_id").as("query_id"),
+          flatten(array((0 until PqM).map(j => transform(dense.getItem(j),
+            c => coalesce(l2sq(subvec(col("nvec"), j), c), lit(1e18)))): _*)).as("dtab"))
+        .persist()
+    }
 
   /** The shared ADC tail used by [[annPqAdc]] (cand = None → every
     * (query, vector) pair) and [[annIvfPq]] (cand = the probed-cell

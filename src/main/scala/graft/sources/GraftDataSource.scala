@@ -172,16 +172,19 @@ class GraftTableProvider extends TableProvider with DataSourceRegister
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    val p = path(opts)
-    if (MergeTable.latestManifest(p).isEmpty)
-      // the writer resolves the provider's table BEFORE deciding V2 vs
-      // V1 write; a not-yet-created table is not an error here — the
-      // placeholder carries no capabilities, so the write falls back to
-      // the V1 CreatableRelationProvider door (which creates the table)
-      // and a read attempt fails with the capability error. Plain reads
-      // of a missing table still throw in inferSchema above.
-      new GraftPreCreationTable(p, schema)
-    else resolveOnce(opts)
+    // through the memo: a read already resolved the table in inferSchema,
+    // and this step must pin the SAME snapshot without listing the log
+    // again (a drop in between must not turn the read into a placeholder)
+    try resolveOnce(opts)
+    catch {
+      case _: NoSuchTableException =>
+        // the writer resolves the provider's table BEFORE deciding V2 vs
+        // V1 write; a not-yet-created table is not an error here — the
+        // placeholder carries no capabilities, so the write falls back to
+        // the V1 CreatableRelationProvider door (which creates the table).
+        // Plain reads of a missing table still throw in inferSchema above.
+        new GraftPreCreationTable(path(opts), schema)
+    }
   }
 
   // ---- streaming read: spark.readStream.format("graft").load(path) --------

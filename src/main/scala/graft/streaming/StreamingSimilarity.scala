@@ -17,50 +17,25 @@ object StreamingSimilarity {
   /** Assign each arriving vector to its nearest trained centroid — the
     * query-time half of the IVF quantizer run incrementally. The trained
     * centroid table (k×Dim, memoized batch-side by
-    * [[SimilarityOps.kmeansCentroids]]) is collected ONCE at stream
-    * definition and ships in the task closure — exactly how a production
-    * scorer loads its quantizer; the per-row argmax is stateless, so the
-    * stream needs no state store and replays idempotently.
+    * [[SimilarityOps.kmeansCentroids]]) is collected ONCE per session and
+    * ships in the plan as the nearest-centroid kernel's candidate literal —
+    * exactly how a production scorer loads its quantizer; the per-row
+    * argmax is stateless, so the stream needs no state store and replays
+    * idempotently.
     *
-    * Parity contract with the batch [[SimilarityOps.coarseCells]]: the
-    * cosine loop accumulates (dot, ‖a‖², ‖b‖²) in index order — the native
-    * kernel's exact order — and the election uses
-    * `java.lang.Double.compare` while scanning cids ascending, so ties
-    * break toward the smaller cid AND a NaN cosine (zero-norm vector or
-    * centroid) ranks GREATEST — exactly Spark's NaN-last ascending /
-    * NaN-first descending sort order, so streamed assignments equal the
-    * batch window's `cos desc, cid` election bit-for-bit even on
-    * degenerate inputs (StreamingSpec).
+    * Parity with the batch [[SimilarityOps.coarseCells]] is by
+    * construction: both run the same [[SimilarityOps.kmeansAssign]]
+    * projection, so ties, NaN cosines (a zero-norm vector elects the
+    * smallest cid) and scores agree bit-for-bit (StreamingSpec).
     */
   def assignStream(s: SparkSession, vecs: DataFrame, dir: String): Dataset[Assigned] = {
     import s.implicits._
-    val cents: Array[(Long, Array[Double])] = SimilarityOps.kmeansCentroids(s, dir)
-      .collect()
-      .map(r => (r.getLong(r.fieldIndex("cid")),
-        r.getSeq[Double](r.fieldIndex("c_vec")).toArray))
-      .sortBy(_._1)
-    vecs
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("vec"))
-      .as[(Long, Array[Double])]
-      .map { case (id, v) =>
-        var bestCid = -1L
-        var bestCos = Double.NegativeInfinity
-        cents.foreach { case (cid, c) =>
-          var dot = 0.0; var na = 0.0; var nb = 0.0
-          var i = 0
-          while (i < v.length) {
-            val xi = v(i); val yi = c(i)
-            dot += xi * yi; na += xi * xi; nb += yi * yi
-            i += 1
-          }
-          val cos = dot / (math.sqrt(na) * math.sqrt(nb))
-          // Double.compare, not >: NaN ranks greatest (Spark's sort order),
-          // so a zero-norm vector elects the same cell as the batch window
-          if (java.lang.Double.compare(cos, bestCos) > 0) { bestCos = cos; bestCid = cid }
-        }
-        Assigned(id, bestCid, bestCos)
-      }
+    SimilarityOps.kmeansAssign(
+        vecs.select(col("vec_id"),
+          transform(col("embedding"), x => x.cast("double")).as("vec")),
+        SimilarityOps.kmeansCands(s, dir))
+      .select(col("vec_id"), col("cid").as("cell"), col("cos"))
+      .as[Assigned]
   }
 
   // ---- quantizer staleness monitor (streaming twin) -----------------------

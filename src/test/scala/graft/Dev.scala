@@ -17,7 +17,8 @@ import graft.sources.Tables
   *  - `ab q21|diff`: two arms of one computation, timed interleaved so
   *    window drift hits both alike;
   *  - `plans <tag> <suffix> [query ...]`: each query's final plan into
-  *    `plans/<tag>/<query>_<suffix>.txt`; a pass over every query also
+  *    `plans/<tag>/<query>_<suffix>.txt`, run-local ids masked so a rerun
+  *    on unchanged code diffs empty; a pass over every query also
   *    rewrites the `PLANS.md` table from the same plans.
   *
   * Every subcommand runs on `SPARK_GRAFT_SF_DIR` (default sf0.1) in a
@@ -190,6 +191,31 @@ object Dev {
     out.takeWhile(!_.contains("== Initial Plan ==")).mkString("\n")
   }
 
+  /** `plan` with its run-local tokens masked, so rerunning `plans` on
+    * unchanged code rewrites the files unchanged and a diff shows the
+    * plans that moved: expression ids (`#12`) and lambda variable numbers
+    * (`lambda x_40#`), both JVM-global counters; exchange ids
+    * (`plan_id=598`); object identities (`GraftV1Relation@3f7baa9f`) and
+    * lambda class names; the application id, UUIDs and random suffixes
+    * that scratch paths and table names carry; query-stage and codegen
+    * stage numbers, which follow AQE's stage completion order; and scan
+    * metadata Spark cut to a fixed length (`DataFilters: [...`), whose cut
+    * point moves with the width of the ids in it. What is left to differ
+    * between two runs is AQE choosing differently (a join side, a
+    * grouping-key order), which is a real difference in what ran. */
+  def stablePlan(plan: String): String = plan
+    .replaceAll("(?m)(\\b[A-Z]\\w*: )(?:(?!, [A-Z]\\w*: ).)*\\.\\.\\.(?=, [A-Z]\\w*: |$)", "$1...")
+    .replaceAll("#\\d+", "#")
+    .replaceAll("(lambda \\w+?)_\\d+#", "$1_#")
+    .replaceAll("plan_id=\\d+", "plan_id=")
+    .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$\\$Lambda")
+    .replaceAll("@[0-9a-f]{5,}\\b", "@")
+    .replaceAll("local-?\\d{10,}", "local-")
+    .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+    .replaceAll("_[0-9a-f]{8}_[0-9a-f]{8}\\b", "_<id>")
+    .replaceAll("QueryStage \\d+", "QueryStage")
+    .replaceAll("\\*\\(\\d+\\)", "*")
+
   private def plans(
       spark: SparkSession, tag: String, suffix: String, only: Seq[String]): Unit = {
     val names = if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted
@@ -198,7 +224,7 @@ object Dev {
     val rows = names.map { n =>
       val row = try {
         val p = finalPlan(SparkEntry.queries(n)(spark, sfDir))
-        Files.writeString(outDir.resolve(s"${n}_$suffix.txt"), p + "\n")
+        Files.writeString(outDir.resolve(s"${n}_$suffix.txt"), stablePlan(p) + "\n")
         val shuffles = "Exchange hashpartitioning".r.findAllIn(p).size
         val broadcasts = "BroadcastExchange".r.findAllIn(p).size
         val sorts = "Sort ".r.findAllIn(p).size

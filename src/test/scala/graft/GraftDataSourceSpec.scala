@@ -752,6 +752,31 @@ class GraftDataSourceSpec extends AnyFunSuite {
       .as[Long].head() == 1001L)
   }
 
+  test("getTable pins inferSchema's snapshot, even if the table goes away") {
+    // Spark resolves a read in two steps, inferSchema then getTable; the
+    // second must reuse the first's resolution (one log listing per read),
+    // not re-list the log and fall back to the pre-creation placeholder
+    val t = seeded("pinned")
+    val provider = new graft.sources.GraftTableProvider
+    val props = java.util.Map.of("path", t)
+    val schema = provider.inferSchema(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(props))
+    val log = java.nio.file.Paths.get(t, "_graft_log")
+    val aside = java.nio.file.Paths.get(s"$t-log-aside")
+    Files.move(log, aside)
+    try {
+      val table = provider.getTable(schema, Array.empty, props)
+      assert(table.isInstanceOf[graft.sources.GraftTable], table.getClass.getName)
+      assert(table.schema() == schema)
+    } finally Files.move(aside, log)
+    // a provider that never resolved the path still sees a missing table
+    // as the write door's placeholder
+    val fresh = freshTable("absent")
+    assert(new graft.sources.GraftTableProvider()
+      .getTable(schema, Array.empty, java.util.Map.of("path", fresh))
+      .isInstanceOf[graft.sources.GraftPreCreationTable])
+  }
+
   test("IsNull / IsNotNull prune from null counts; value predicates " +
     "prune all-null files") {
     val t = freshTable("nulls")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -512,28 +512,99 @@ class LlmOpsSpec extends AnyFunSuite {
       s"covered ${out.map(_._2).sum} < ${2 * planted}")
   }
 
-  test("kmeans assignment: aggregate argmax equals the retired window form") {
-    // kmeansAssign replaced a row_number window (which shuffled the whole
-    // k-way crossJoin) with a struct-extreme aggregate; this pins the two
-    // forms equal on (vec_id, cid) over the full corpus so the rewrite can
-    // never drift from the documented (cos desc, cid asc) tie-break.
-    import org.apache.spark.sql.expressions.Window
+  test("nearest-centroid kernel equals the retired argmax forms") {
+    // kmeansAssign and pqAssign were a crossJoin into max(struct(cos,
+    // -cid, vec)) and a join into a (vec_id, j) row_number window; both are
+    // now the NearestCentroid kernel. This pins the kernel equal to both
+    // retired forms, for both metrics, on (vec_id, cid) and on the score
+    // (bit for bit, NaN and null included): over the full corpus, and on
+    // planted exact ties, a zero vector (NaN cosine), a null element, a
+    // NaN element, a null vector, a candidate with a null element, and a
+    // cid gap (starved codebook entries).
+    import LlmOpsSpec._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.functions.VectorExpressions.{candidates, nearest}
+    def same(kernel: Seq[Elected], retired: Seq[Elected], what: String): Unit = {
+      assert(kernel.map(_.id) == retired.map(_.id), what)
+      kernel.zip(retired).foreach { case (k, r) =>
+        assert(k.cid == r.cid && sameScore(k.score, r.score), s"$what: kernel $k, retired $r")
+      }
+    }
+    def kernel(vs: DataFrame, v: String, cands: Column, metric: String): Seq[Elected] =
+      elected(vs.select(col("vec_id"), col("j"), nearest(col(v), cands, metric).as("b"))
+        .select(col("vec_id"), col("j"), col("b.cid"), col("b.score")))
+
+    // full corpus, cosine: the trained centroids, through kmeansAssign
     val e = graft.sources.Tables.read(spark, dir, "embeddings")
-      .select(col("vec_id"),
+      .select(col("vec_id"), lit(0).as("j"),
         transform(col("embedding"), x => x.cast("double")).as("vec"))
-    val cents = SimilarityOps.kmeansCentroids(spark, dir)
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("cid"))
-    val windowForm = e.crossJoin(broadcast(cents))
-      .withColumn("cos", SimilarityOps.cosine(col("vec"), col("c_vec")))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("vec_id"), col("cid"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val aggForm = SimilarityOps.coarseCells(spark, dir)
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(aggForm.size == windowForm.size)
-    assert(aggForm == windowForm)
+    val cents = SimilarityOps.kmeansCentroids(spark, dir).withColumn("j", lit(0))
+    val kernelCos = elected(SimilarityOps.kmeansAssign(e, SimilarityOps.kmeansCands(spark, dir))
+      .select(col("vec_id"), lit(0), col("cid"), col("cos")))
+    same(kernelCos, elected(structArgmax(e, "vec", cents, cosine = true)), "corpus, max(struct)")
+    same(kernelCos, elected(windowArgmax(e, "vec", cents, cosine = true)), "corpus, window")
+    assert(kernelCos.size == 500 && kernelCos.map(_.cid).distinct.size > 1)
+
+    // full corpus, l2: the trained codebooks, and the production codes
+    val sub = SimilarityOps.pqSubvectors(spark, dir)
+    val books = SimilarityOps.pqCodebooks(spark, dir)
+    val kernelL2 = kernel(sub, "sv", SimilarityOps.pqCands(spark, dir).getItem(col("j")), "l2")
+    same(kernelL2, elected(structArgmax(sub, "sv", books, cosine = false)), "corpus, min(struct)")
+    same(kernelL2, elected(windowArgmax(sub, "sv", books, cosine = false)), "corpus, l2 window")
+    assert(kernelL2.size == 500 * SimilarityOps.PqM)
+    val codes = elected(SimilarityOps.pqCodes(spark, dir)
+      .select(col("vec_id"), col("j"), col("cid"), lit(null).cast("double")))
+    assert(codes.map(c => (c.id, c.cid)) == kernelL2.map(k => (k.id, k.cid)))
+
+    // planted edge cases, one subspace, both metrics
+    val vecType = ArrayType(DoubleType)
+    def frame(rows: Seq[Row], first: String, vec: String): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+        StructField(first, LongType), StructField("j", IntegerType),
+        StructField(vec, vecType))))
+    val nan = Double.NaN
+    val planted = frame(Seq(
+      Row(1L, 0, Seq(0.0, 0.0, 1.0, 1.0)),    // equidistant from the twins 2 and 5
+      Row(2L, 0, Seq(0.0, 0.0, 0.0, 0.0)),    // zero vector: NaN cosine
+      Row(3L, 0, Seq(1.0, null, 0.0, 0.0)),   // null element: null scores
+      Row(4L, 0, null),                       // null vector
+      Row(5L, 0, Seq(1.0, 0.1, 0.0, 0.0)),
+      Row(6L, 0, Seq(0.0, 1.0, 0.2, nan))),   // NaN element: NaN scores
+      "vec_id", "vec")
+    val gap = Seq(                             // cids 1, 3, 4 and 6 starved
+      Row(7L, Seq(0.0, 1.0, 0.0, 0.0)),
+      Row(5L, Seq(0.0, 0.0, 1.0, 1.0)),        // twin of 2, listed first
+      Row(0L, Seq(1.0, 0.0, 0.0, 0.0)),
+      Row(2L, Seq(0.0, 0.0, 1.0, 1.0)))
+    val withNull = gap :+ Row(9L, Seq(1.0, 1.0, null, 0.0))
+    for ((name, cs) <- Seq("gap" -> gap, "null candidate" -> withNull)) {
+      val cdf = frame(cs.map(r => Row(r.get(0), 0, r.get(1))), "cid", "c_vec")
+      val byMetric = Seq(true, false).map { cosine =>
+        val k = kernel(planted, "vec", candidates(cs), if (cosine) "cosine" else "l2")
+        same(k, elected(structArgmax(planted, "vec", cdf, cosine)), s"$name, $cosine struct")
+        same(k, elected(windowArgmax(planted, "vec", cdf, cosine)), s"$name, $cosine window")
+        k.map(x => x.id._1 -> x).toMap
+      }
+      same(elected(SimilarityOps.kmeansAssign(planted, candidates(cs))
+          .select(col("vec_id"), lit(0), col("cid"), col("cos"))),
+        byMetric.head.values.toSeq.sortBy(_.id), s"$name, kmeansAssign")
+      val (cos, l2) = (byMetric(0), byMetric(1))
+      if (name == "gap") {
+        // the documented rules, read off the planted rows
+        assert(cos(1L).cid == 2L && l2(1L).cid == 2L, "ties break to the smaller cid")
+        assert(cos(2L).cid == 0L && cos(2L).score.exists(_.isNaN), "NaN ties: smallest cid")
+        assert(cos(3L).cid == 0L && cos(3L).score.isEmpty, "null ties: smallest cid")
+        assert(cos(4L).cid == 0L && l2(4L).cid == 0L && l2(4L).score.isEmpty)
+        assert(cos(5L).cid == 0L && l2(5L).cid == 0L)
+      } else {
+        // a null distance ranks first under l2 (asc, nulls first) and a
+        // null cosine last (desc, nulls last); all-null rows still tie
+        assert(Seq(1L, 2L, 5L, 6L).forall(l2(_).cid == 9L), l2.mkString(","))
+        assert(Seq(3L, 4L).forall(l2(_).cid == 0L), l2.mkString(","))
+        assert(cos.values.forall(_.cid != 9L), cos.mkString(","))
+      }
+    }
   }
 
   test("knn graph: neighbor is the in-cell argmax, cells consistent") {
@@ -1053,5 +1124,49 @@ class LlmOpsSpec extends AnyFunSuite {
 
   implicit class TupleOps(rows: Array[(Long, Long, Long)]) {
     def toMap2: Map[Long, (Long, Long)] = rows.map(r => r._1 -> (r._2, r._3)).toMap
+  }
+}
+
+object LlmOpsSpec {
+  import org.apache.spark.sql.expressions.Window
+
+  /** One election: ((vec_id, j), cid, score). */
+  final case class Elected(id: (Long, Int), cid: Long, score: Option[Double])
+
+  def sameScore(a: Option[Double], b: Option[Double]): Boolean = (a, b) match {
+    case (Some(x), Some(y)) =>
+      java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y)
+    case (x, y) => x == y
+  }
+
+  /** (vec_id, j, cid, score) rows, sorted by (vec_id, j). */
+  def elected(df: DataFrame): Seq[Elected] =
+    df.collect().map(r => Elected((r.getLong(0), r.getInt(1)), r.getLong(2),
+      if (r.isNullAt(3)) None else Some(r.getDouble(3)))).toSeq.sortBy(_.id)
+
+  private def score(v: String, cosine: Boolean): Column =
+    if (cosine) SimilarityOps.cosine(col(v), col("c_vec"))
+    else SimilarityOps.l2sq(col(v), col("c_vec"))
+
+  /** The retired struct-extreme argmax over (vec_id, j, v) against
+    * (j, cid, c_vec): max(struct(cos, -cid)) for cosine (cos desc, then
+    * cid asc), min(struct(d2, cid)) for l2 (d2 asc, then cid asc). */
+  def structArgmax(vs: DataFrame, v: String, cents: DataFrame, cosine: Boolean): DataFrame = {
+    val p = vs.join(broadcast(cents), "j").groupBy(col("vec_id"), col("j"))
+    if (cosine)
+      p.agg(max(struct(score(v, cosine).as("s"), (-col("cid")).as("ncid"))).as("b"))
+        .select(col("vec_id"), col("j"), (-col("b.ncid")).as("cid"), col("b.s"))
+    else
+      p.agg(min(struct(score(v, cosine).as("s"), col("cid"))).as("b"))
+        .select(col("vec_id"), col("j"), col("b.cid"), col("b.s"))
+  }
+
+  /** The retired row_number window: (cos desc, cid) or (d2 asc, cid). */
+  def windowArgmax(vs: DataFrame, v: String, cents: DataFrame, cosine: Boolean): DataFrame = {
+    val w = Window.partitionBy(col("vec_id"), col("j"))
+      .orderBy(if (cosine) col("s").desc else col("s").asc, col("cid"))
+    vs.join(broadcast(cents), "j").withColumn("s", score(v, cosine))
+      .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+      .select(col("vec_id"), col("j"), col("cid"), col("s"))
   }
 }

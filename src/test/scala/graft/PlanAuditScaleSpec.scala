@@ -90,21 +90,29 @@ class PlanAuditScaleSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
-  test("sf0.1 coarse-cell assignment: broadcast centroids, one vec_id shuffle") {
+  /** A quantizer assignment that is one map-side projection: the
+    * nearest-centroid kernel against the candidate literal, with no
+    * exchange of any kind, no aggregate, no window, no sort and no join. */
+  private def auditMapSideAssign(name: String, df: => org.apache.spark.sql.DataFrame,
+      kernel: String): String = {
+    val p = auditCommon(name, Dev.finalPlan(df))
+    assert(p.contains(kernel), p)
+    assert(!p.contains("Exchange"), p)
+    assert(!p.contains("Aggregate") && !p.contains("Window"), p)
+    assert("Sort \\[".r.findFirstIn(p).isEmpty && !p.contains("Join"), p)
+    p
+  }
+
+  test("sf0.1 coarse-cell assignment: map-side kernel, no exchange") {
     // the kmeans assignment q_sem_dedup and q_knn_graph build inside their
     // checkpoint job, which the query plans above only see as Scan
-    // ExistingRDD: the k centroids broadcast into the crossJoin, and the
-    // argmax aggregate is the only shuffle, keyed by vec_id
-    val p = auditCommon("coarseCells",
-      Dev.finalPlan(SimilarityOps.coarseCells(spark, dir)))
-    // the broadcast subtree (printed last) is the memoized centroid
-    // artifact, never the embeddings
-    val broadcastSide = p.split("\n").dropWhile(!_.contains("BroadcastExchange"))
-    assert(broadcastSide.exists(_.contains("ivf-centroids")), p)
-    assert(!broadcastSide.exists(_.contains("embeddings.parquet")), p)
-    assert(hashExchanges(p) == 1, p)
-    val ex = p.split("\n").find(_.contains("Exchange hashpartitioning")).get
-    assert(ex.contains("hashpartitioning(vec_id"), ex)
+    // ExistingRDD; it was a broadcast crossJoin into a vec_id SortAggregate
+    auditMapSideAssign("coarseCells", SimilarityOps.coarseCells(spark, dir), "nearest_cosine")
+  }
+
+  test("sf0.1 PQ codes encode: map-side kernel, no window, no sort") {
+    // the codes build was a join on j into a (vec_id, j) row_number window
+    auditMapSideAssign("pqEncode", SimilarityOps.pqEncode(spark, dir), "nearest_l2")
   }
 
   test("sf0.1 q_sem_dedup: assignment checkpointed once, bounded self-join shuffles") {
@@ -172,7 +180,7 @@ class PlanAuditScaleSpec extends AnyFunSuite {
     // partial WindowGroupLimit trims to m per cell BEFORE the cid shuffle
     assert(p.contains("WindowGroupLimit"), p)
     assert("WindowGroupLimit.*Partial".r.findFirstIn(p).isDefined, p)
-    // two key exchanges total: the vec_id argmax assignment window + cid
+    // key exchanges: the cid top-m (the assignment itself is map-side)
     assert(hashExchanges(p) <= 2, p)
   }
 }

@@ -569,4 +569,22 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(!p.contains("hashpartitioning(user_id"), p)
     } finally perUser.unpersist()
   }
+
+  test("Dev.stablePlan: the same query built twice prints the same plan") {
+    // expression and exchange ids are JVM-global counters: two builds of
+    // one query differ in every `#n` and `plan_id=`, and nowhere else
+    def q = Tables.read(spark, dir, "events").groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"))
+    val (a, b) = (Dev.finalPlan(q), Dev.finalPlan(q))
+    assert(a != b)
+    assert(Dev.stablePlan(a) == Dev.stablePlan(b), s"$a\n----\n$b")
+    assert(Dev.stablePlan("GraftV1Relation@3f7baa9f x#12L [plan_id=598] " +
+      "/tmp/graft-merge/t-sf0.01-ab12cd-local1792405414176 lambda x_40#41 " +
+      "*(3) ShuffleQueryStage 5 Ops$$$Lambda$8363/0x00007f0655ed7ac0@1f2e3d4c") ==
+      "GraftV1Relation@ x#L [plan_id=] /tmp/graft-merge/t-sf0.01-ab12cd-local- lambda x_# " +
+      "* ShuffleQueryStage Ops$$$Lambda@")
+    // metadata Spark cut to a fixed length keeps its key, not its cut tail
+    assert(Dev.stablePlan("Batched: true, DataFilters: [(a#1 < 2) OR ..., Format: Parquet") ==
+      "Batched: true, DataFilters: ..., Format: Parquet")
+  }
 }

@@ -178,6 +178,45 @@ class VectorExpressionSpec extends AnyFunSuite {
       .select(adc_sum(col("codes"), col("dtab"), k).as("d")).first()
     assert(oob.isNullAt(0))
   }
+
+  test("nearest: interpreted eval equals codegen, scores equal the kernels, metric checked") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.functions.{NearestCentroid, VectorExpressions}
+    import VectorExpressions.{candidates, l2_sq, nearest}
+    val cands = candidates(Seq(Row(3L, Seq(1.0, 0.0)), Row(1L, Seq(0.0, 1.0)),
+      Row(2L, Seq(0.6, 0.8))))
+    val vs = Seq(Seq(1.0, 0.1), Seq(0.0, 0.0), Seq(0.3, 0.4)).toDF("v")
+    val compiled = vs.select(nearest($"v", cands, "cosine").as("c"),
+      nearest($"v", cands, "l2").as("l")).collect()
+    val vecType = ArrayType(DoubleType)
+    vs.collect().map(_.getSeq[Double](0)).zip(compiled).foreach { case (v, row) =>
+      for ((metric, i) <- Seq("cosine" -> 0, "l2" -> 1)) {
+        val interp = NearestCentroid(Literal.create(v, vecType),
+          org.apache.spark.sql.graftbridge.Bridge.expression(cands), metric).eval(null)
+          .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+        val c = row.getStruct(i)
+        assert(interp.getLong(0) == c.getLong(0), s"$metric $v")
+        assert(java.lang.Double.compare(interp.getDouble(1), c.getDouble(1)) == 0, s"$metric $v")
+      }
+    }
+    // the winner's score is the pairwise kernel's, bit for bit
+    val check = vs.select(nearest($"v", cands, "cosine").as("c"), nearest($"v", cands, "l2").as("l"),
+      $"v").collect()
+    val cv = Map(3L -> Seq(1.0, 0.0), 1L -> Seq(0.0, 1.0), 2L -> Seq(0.6, 0.8))
+    check.foreach { r =>
+      val (c, l, v) = (r.getStruct(0), r.getStruct(1), r.getSeq[Double](2))
+      val pair = Seq((v, cv(c.getLong(0)), cv(l.getLong(0)))).toDF("v", "a", "b")
+        .select(cosine_sim($"v", $"a"), l2_sq($"v", $"b")).first()
+      assert(java.lang.Double.compare(pair.getDouble(0), c.getDouble(1)) == 0)
+      assert(pair.getDouble(1) == l.getDouble(1))
+    }
+    assert(check(1).getStruct(0).getLong(0) == 1L) // zero vector: NaN ties, smallest cid
+    assert(!NearestCentroid(Literal.create(Seq(1.0), vecType),
+      org.apache.spark.sql.graftbridge.Bridge.expression(cands), "dot")
+      .checkInputDataTypes().isSuccess)
+  }
 }
 
 object VectorExpressionSpec {
