@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extensions: registers the engine's native expressions for SQL
   * users (`SELECT cosine_sim(a, b)`) and the custom-plan-tier strategies
-  * ([[graft.plans.RangeJoinStrategy]]). Install via
+  * ([[graft.plans.RangeJoinStrategy]], and [[graft.plans.GraftScanStrategy]],
+  * which plans every graft batch read). Install via
   * `SparkSession.builder.withExtensions(new GraftExtensions)` — done by
   * [[graft.GraftSession]] — or
   * `spark.sql.extensions=graft.functions.GraftExtensions` on a cluster.
@@ -14,6 +15,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
+    // graft snapshot scans plan inline as the engine's own parquet read
+    // (GraftScan has no batch reader of its own)
+    e.injectPlannerStrategy(graft.plans.GraftScanStrategy(_))
     e.injectOptimizerRule(_ => graft.plans.NativeKernelRule)
     // OPTIMIZE / VACUUM graft.`/path` — grammar Spark doesn't have,
     // added by a delegating parser (everything else parses verbatim)

@@ -7,6 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.json4s.{jvalue2extractable, jvalue2monadic}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions
+import org.apache.spark.sql.catalyst.plans.{logical, LeftAnti}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -572,6 +577,12 @@ object MergeTable {
     // incarnation token captured BEFORE the record read/resolution — see
     // cachePut's contract
     val tok = recordIdent(table, v)
+    // the cached listing IS version v of this incarnation: the head
+    // record need not be parsed again
+    manifestCache.get(cacheKey(table)) match {
+      case Some((m, t)) if m.version == v && tok.contains(t) => return Some(m)
+      case _ => ()
+    }
     readRecord(table, v).map { head =>
       val files = resolveListing(table, v, head)
       val m = TableManifest(
@@ -1211,64 +1222,140 @@ object MergeTable {
       map: Map[String, String]): StructType =
     StructType(schema.fields.map(f => f.copy(name = physOf(map, f.name))))
 
-  /** Read a file set, applying deletion vectors where entries carry one:
-    * DV-free files scan exactly as before; DV-bearing files scan with the
-    * hidden parquet `_metadata` (file path + row index) and anti-join the
-    * union of the manifest's referenced DV datasets on (file, position).
-    * The union is exact because a file's DV pointer always holds ALL of
-    * its deleted positions (see [[DataFileEntry.dv]]) and stale datasets
-    * only mention paths this manifest no longer reads. The DV side is a
-    * tiny parquet scan (AQE plans the anti-join as a broadcast), bounded
-    * by un-compacted deletions — [[optimize]] rewrites DV-heavy files and
-    * retires their vectors. */
+  /** The schema every deletion-vector dataset is written with: one row
+    * per masked position. Reads declare it, so no footer is inferred. */
+  private[graft] val DvSchema: StructType =
+    StructType(Seq(StructField("path", StringType), StructField("pos", LongType)))
+
+  /** THE snapshot read, as a resolved Catalyst plan: every read of a file
+    * set (the DSv2 scan through [[graft.plans.GraftScanStrategy]], time
+    * travel, merges, the stream and change-feed doors) is this one plan,
+    * and building it lists no file, infers no schema and runs no job.
+    *
+    *  - each file set is a `LogicalRelation` over a [[ManifestFileIndex]]
+    *    that holds the manifest's entries, in PHYSICAL column names;
+    *  - `filters` are re-applied as Catalyst predicates right above each
+    *    relation, so the parquet reader sees them (row-group skipping)
+    *    under whatever file skipping chose `files`; shapes that do not
+    *    translate exactly are left to the caller's own filter;
+    *  - a `Project` renames physical columns back to the logical ones,
+    *    onto `output`'s expression ids when given (the scan relation the
+    *    plan replaces), else onto fresh attributes for all of `schema`;
+    *  - DV-bearing files scan with the hidden parquet `_metadata` (file
+    *    path + row index) and anti-join the union of their DV datasets on
+    *    (file, position). The union is exact because a file's DV pointer
+    *    always holds ALL of its deleted positions (see
+    *    [[DataFileEntry.dv]]) and stale datasets only mention paths this
+    *    manifest no longer reads. The DV side is a tiny parquet scan
+    *    (planned as a broadcast), bounded by un-compacted deletions —
+    *    [[optimize]] rewrites DV-heavy files and retires their vectors.
+    *
+    * `withPosition` reads every file position-tagged instead: the VISIBLE
+    * rows plus their table-relative file path (`__dv_path`) and in-file
+    * position (`__dv_pos`) — what a merge-on-read DELETE records (row
+    * positions are stable because data files are immutable). */
+  private[graft] def snapshotPlan(s: SparkSession, table: String,
+      schema: StructType, files: Seq[DataFileEntry],
+      columnMap: Map[String, String] = Map.empty,
+      filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
+      output: Seq[expressions.Attribute] = Nil,
+      withPosition: Boolean = false): logical.LogicalPlan = {
+    import expressions._
+    val want = if (output.nonEmpty) output else DataTypeUtils.toAttributes(schema)
+    def tagAttrs = Seq(AttributeReference("__dv_path", StringType)(),
+      AttributeReference("__dv_pos", LongType)())
+    if (files.isEmpty)
+      return logical.LocalRelation(if (withPosition) want ++ tagAttrs else want)
+    // read each wanted column at the wanted type: a scan's output carries
+    // nested-pruned struct types, which parquet reads as they are
+    val pSchema = physicalSchema(StructType(schema.fields.map(f =>
+      want.find(_.name == f.name).fold(f)(a => f.copy(dataType = a.dataType)))),
+      columnMap)
+    def relation(index: graft.sources.ManifestFileIndex, data: StructType) =
+      LogicalRelation(HadoopFsRelation(index, new StructType(),
+        org.apache.spark.sql.graftbridge.Bridge.asNullable(data), None,
+        new ParquetFileFormat(), Map.empty)(s))
+    /** The logical columns of `fs` (fresh ids), filtered; tagged with
+      * (__dv_path, __dv_pos) and DV-masked when `tag`. */
+    def branch(fs: Seq[DataFileEntry], tag: Boolean): logical.LogicalPlan = {
+      val rel = relation(graft.sources.ManifestFileIndex.of(s, table, fs), pSchema)
+      // a tagged scan carries `_metadata` narrowed to the two fields the
+      // tag reads, so the scan generates no other metadata column
+      lazy val meta = {
+        val m = rel.withMetadataColumns().output.last
+        m.withDataType(StructType(m.dataType.asInstanceOf[StructType]
+          .filter(f => f.name == "file_path" || f.name == "row_index")))
+      }
+      val scan = if (tag) rel.copy(output = rel.output :+ meta) else rel
+      val phys = schema.fieldNames.zip(rel.output).toMap
+      def attr(n: String) = phys.get(n)
+        .orElse(phys.collectFirst { case (k, a) if k.equalsIgnoreCase(n) => a })
+      val kept = filters.flatMap(graft.plans.GraftScanStrategy.toPredicate(_, attr))
+        .reduceOption(And).fold[logical.LogicalPlan](scan)(logical.Filter(_, scan))
+      val cols = want.map(a => Alias(attr(a.name).get, a.name)())
+      if (!tag) logical.Project(cols, kept)
+      else {
+        def field(n: String) = GetStructField(meta,
+          meta.dataType.asInstanceOf[StructType].fieldIndex(n), Some(n))
+        val tagged = logical.Project(cols ++ Seq(
+          Alias(RegExpExtract(field("file_path"),
+            Literal("(data/[^/]+/[^/]+)$"), Literal(1)), "__dv_path")(),
+          Alias(field("row_index"), "__dv_pos")()), kept)
+        val dvDirs = fs.flatMap(_.dv).distinct
+        if (dvDirs.isEmpty) tagged
+        else {
+          val pairs = relation(
+            graft.sources.ManifestFileIndex.ofDirs(s, table, dvDirs), DvSchema)
+          val Seq(p, q) = tagged.output.takeRight(2)
+          logical.Join(tagged, pairs, LeftAnti, Some(And(
+            EqualTo(p, pairs.output(0)), EqualTo(q, pairs.output(1)))),
+            logical.JoinHint.NONE)
+        }
+      }
+    }
+    val plan =
+      if (withPosition) branch(files, tag = true)
+      else {
+        val (dvFiles, plain) = files.partition(_.dv.nonEmpty)
+        val parts = Seq(plain -> false, dvFiles -> true).collect {
+          case (fs, tag) if fs.nonEmpty =>
+            val b = branch(fs, tag)
+            if (tag) logical.Project(b.output.take(want.size), b) else b
+        }
+        if (parts.size == 1) parts.head else logical.Union(parts)
+      }
+    if (output.isEmpty) plan
+    else logical.Project(plan.output.zip(want).map { case (o, w) =>
+      Alias(o, w.name)(w.exprId) }, plan)
+  }
+
+  /** [[snapshotPlan]] as a DataFrame. */
   private def readFiles(s: SparkSession, table: String, schema: StructType,
       files: Seq[DataFileEntry],
       columnMap: Map[String, String] = Map.empty): DataFrame = {
-    if (files.isEmpty)
-      return s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
-    val (dvFiles, plain) = files.partition(_.dv.nonEmpty)
-    // files are written under PHYSICAL names; scan physical, project back
-    // to the version's logical names (a no-op select for unmapped tables)
-    val pSchema = physicalSchema(schema, columnMap)
-    def toLogical(df: DataFrame) = df.select(schema.fields.map(f =>
-      col(physOf(columnMap, f.name)).as(f.name)).toSeq: _*)
-    def plainRead(fs: Seq[DataFileEntry]) = toLogical(
-      s.read.schema(pSchema).parquet(fs.map(f => s"$table/${f.path}"): _*))
-    if (dvFiles.isEmpty) plainRead(plain)
-    else {
-      // readFilesWithPosition already projects back to logical names
-      val masked = readFilesWithPosition(s, table, schema, dvFiles, columnMap)
-        .drop("__dv_path", "__dv_pos")
-      if (plain.isEmpty) masked else plainRead(plain).unionByName(masked)
-    }
+    requirePresent(table, files)
+    org.apache.spark.sql.graftbridge.Bridge.ofRows(s,
+      snapshotPlan(s, table, schema, files, columnMap))
   }
 
-  /** VISIBLE rows of `entries`, each tagged with its table-relative file
-    * path (`__dv_path`) and in-file position (`__dv_pos`) from the hidden
-    * parquet `_metadata` columns; existing deletion vectors are applied.
-    * The (path, pos) tag is what a merge-on-read DELETE records — row
-    * positions are stable because data files are immutable. */
+  /** [[snapshotPlan]]'s position-tagged form as a DataFrame. */
   private def readFilesWithPosition(s: SparkSession, table: String,
       schema: StructType, entries: Seq[DataFileEntry],
       columnMap: Map[String, String] = Map.empty): DataFrame = {
-    val base = s.read.schema(physicalSchema(schema, columnMap))
-      .parquet(entries.map(f => s"$table/${f.path}"): _*)
-      .withColumn("__dv_path",
-        regexp_extract(col("_metadata.file_path"), "(data/[^/]+/[^/]+)$", 1))
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-      // project the physical scan back to logical names for every caller
-      .select(schema.fields.map(f =>
-        col(physOf(columnMap, f.name)).as(f.name)).toSeq ++
-        Seq(col("__dv_path"), col("__dv_pos")): _*)
-    val dvDirs = entries.flatMap(_.dv).distinct
-    if (dvDirs.isEmpty) base
-    else {
-      val pairs = dvDirs.map(d => s.read.parquet(s"$table/$d"))
-        .reduce(_ unionByName _)
-        .select(col("path").as("__dv_path"), col("pos").as("__dv_pos"))
-      base.join(pairs, Seq("__dv_path", "__dv_pos"), "left_anti")
-    }
+    requirePresent(table, entries)
+    org.apache.spark.sql.graftbridge.Bridge.ofRows(s,
+      snapshotPlan(s, table, schema, entries, columnMap, withPosition = true))
   }
+
+  /** A DataFrame read fails as it is built when a data file it names is
+    * gone (vacuumed under a lagging reader), as a read that lists its
+    * paths does: the stream and change-feed doors classify that failure
+    * ([[graft.streaming.StreamingChangeFeed.isMissingData]]) before they
+    * deliver a frame. One driver-side stat per file, no job. */
+  private def requirePresent(table: String, files: Seq[DataFileEntry]): Unit =
+    files.find(f => !Files.exists(Paths.get(table, f.path))).foreach(f =>
+      throw new java.io.FileNotFoundException(
+        s"$table/${f.path} is gone (vacuumed under this read?)"))
 
   /** Attempt to publish `r` as version `r.version`; false = lost the CAS.
     *
@@ -3109,7 +3196,7 @@ object MergeTable {
             // deletes — the exact workload this mode exists for
             val prior = changed.filter(_.dv.nonEmpty)
             val priorSides = prior.groupBy(_.dv.get).toSeq.map { case (d, es) =>
-              s.read.parquet(s"$table/$d")
+              s.read.schema(DvSchema).parquet(s"$table/$d")
                 .where(col("path").isin(es.map(_.path): _*))
             }
             val allPairs = priorSides

@@ -25,11 +25,15 @@ object SimilarityOps {
 
   val Dim = 64
 
+  /** The corpus with `embedding` widened to `array<double>`: an
+    * element-wise cast, so null arrays and null elements stay null and the
+    * projection stays inside the scan's codegen stage (a lambda form would
+    * not). */
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.read(s, dir, "embeddings")
       .select(
         col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("vec"))
+        col("embedding").cast("array<double>").as("vec"))
 
   private val embSql =
     "SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS vec FROM embeddings"

@@ -430,7 +430,8 @@ object MergeQueries {
     * non-cluster-column predicate pushed into the scan
     * ([[graft.ops.StatsPruning]] consults every file's `value` box before
     * any parquet footer opens)
-    * and deletion-vector masking applied by the V1Scan execution shim.
+    * and deletion-vector masking applied by the inline snapshot read
+    * ([[graft.plans.GraftScanStrategy]]).
     * The oracle reconstructs the latest snapshot protocol-independently,
     * so a DSv2 path that dropped a DV (resurrecting purged rows), leaked
     * a hidden `__dv_*` column, read a stale version, or over-pruned a

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableChange, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, TableScan}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -43,16 +43,19 @@ import graft.ops.MergeTable.TableManifest
   * bounds-first shape the reference's range-lookup endpoints take
   * (`redis_store.py:21-35`), applied one tier up.
   *
-  * Execution goes through the public [[V1Scan]] fallback: the scan hands
-  * Spark a relation whose plan is the engine's own snapshot read
-  * ([[MergeTable.readManifest]] over the PRUNED file set), so deletion-
-  * vector masking, vectorized parquet reading, and whole-stage codegen
-  * all come from the normal Catalyst pipeline instead of a hand-rolled
-  * reader, and every filter is still re-evaluated row-wise above the
-  * scan (file skipping must be sound, never load-bearing for
-  * correctness). The manifest version is pinned when the table object is
-  * created — a concurrent commit cannot shift a running query's
-  * snapshot.
+  * Execution is the engine's own snapshot read, planned inline: the
+  * optimized plan keeps the V2 scan relation (its description, statistics
+  * and pushdown results), and [[graft.plans.GraftScanStrategy]] — installed
+  * by [[graft.functions.GraftExtensions]], which every graft session needs
+  * for batch reads — plans it as [[MergeTable.snapshotPlan]] over the
+  * PRUNED file set. Deletion-vector masking, vectorized parquet reading
+  * with the filters pushed, and whole-stage codegen all come from Spark's
+  * own file-source planning instead of a hand-rolled reader, no nested
+  * query is built, and planning runs no job. Every filter is still
+  * re-evaluated row-wise above the scan (file skipping must be sound,
+  * never load-bearing for correctness). The manifest version is pinned
+  * when the table object is created — a concurrent commit cannot shift a
+  * running query's snapshot.
   *
   * Writes stay on the transactional Scala/SQL command surface
   * ([[MergeTable.mergeUpsert]], `MERGE INTO` via
@@ -591,22 +594,27 @@ class GraftScanBuilder(table: String, m: TableManifest, full: StructType)
     required = requiredSchema
   override def build(): Scan = aggAnswer match {
     case Some((out, row)) => new GraftAggScan(table, m, out, row)
-    case None => new GraftScan(table, m, required, pushed, received)
+    case None => new GraftScan(table, m, full, required, pushed, received)
   }
 }
 
-class GraftScan(table: String, m: TableManifest, required: StructType,
-    pruneFilters: Array[Filter], allFilters: Array[Filter]) extends V1Scan
+class GraftScan(table: String, m: TableManifest, full: StructType,
+    required: StructType, pruneFilters: Array[Filter],
+    allFilters: Array[Filter]) extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
   // two skipping tiers stack: min/max boxes refute ranges, then the
   // opt-in per-file blooms refute equality/IN probes on columns the
   // boxes can't (high-cardinality, uncorrelated with clustering) —
-  // both refute-only, residual filters still re-check every row
+  // both refute-only, residual filters still re-check every row. The
+  // file list is fixed here, so this is where the audit records it.
   private lazy val pruned = {
     val boxed = StatsPruning.prune(m.files, pruneFilters.toSeq,
       c => MergeTable.physOf(m.columnMap, c))
-    graft.ops.BloomIndex.prune(SparkSession.active, table, boxed,
+    val kept = graft.ops.BloomIndex.prune(SparkSession.active, table, boxed,
       pruneFilters.toSeq, c => MergeTable.physOf(m.columnMap, c))
+    GraftScanAudit.record(GraftScanAudit.ScanAudit(
+      table, m.version, m.files.size, kept.size, kept.map(_.path)))
+    kept
   }
 
   /** Manifest-derived size estimate AFTER file skipping — what lets
@@ -632,83 +640,31 @@ class GraftScan(table: String, m: TableManifest, required: StructType,
       s"files=${pruned.size}/${m.files.size} " +
       s"pushed=[${pruneFilters.mkString(", ")}] columns=[${required.fieldNames.mkString(", ")}]"
 
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftV1Relation(context, table, m, pruned, required, allFilters.toSeq)
-      .asInstanceOf[T]
-}
+  /** The engine's snapshot read of the pruned files, producing `output`
+    * (the scan relation's attributes), with every received filter
+    * re-applied inside it so the parquet reader sees them: file skipping
+    * (the manifest stats), row-group skipping (parquet footers) and
+    * row-level filtering stack the way a lakehouse reader's should. The
+    * residual filter above the scan still re-checks every row it
+    * returned — double evaluation of a cheap predicate, never a
+    * correctness dependence. */
+  private[graft] def snapshotPlan(s: SparkSession,
+      output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    planned.computeIfAbsent(output.map(_.exprId), _ =>
+      MergeTable.snapshotPlan(s, table, full, pruned, m.columnMap,
+        allFilters.toSeq, output))
+  // AQE re-plans the scan relation each time a stage completes: one plan
+  // per relation output keeps the rebuilt file index out of that loop
+  private val planned = new java.util.concurrent.ConcurrentHashMap[
+    Seq[org.apache.spark.sql.catalyst.expressions.ExprId],
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
 
-/** The V1 execution shim behind [[GraftScan]]: its plan IS the engine's
-  * snapshot read over the pruned file subset (deletion vectors applied),
-  * projected to the scan's required columns — WITH the pushed filters
-  * re-applied INSIDE the inner plan, so Catalyst forwards them to the
-  * parquet reader (row-group min/max skipping, dictionary filtering,
-  * codegen'd evaluation). Without this the inner scan would read every
-  * row of every kept file and leave all filtering to the FilterExec
-  * above the relation; with it, file-level skipping (the manifest
-  * stats), row-group-level skipping (parquet footers), and row-level
-  * filtering stack the way a lakehouse reader's should. The outer
-  * residual filter still re-checks every row — double evaluation of a
-  * cheap predicate, never a correctness dependence. */
-class GraftV1Relation(ctx: SQLContext, table: String, m: TableManifest,
-    pruned: Seq[MergeTable.DataFileEntry], required: StructType,
-    filters: Seq[Filter])
-    extends BaseRelation with TableScan {
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-  /** `false` = buildScan's RDD already carries INTERNAL rows: the inner
-    * plan's `toRdd` hands its UnsafeRows straight to the outer
-    * RowDataSourceScanExec, skipping the InternalRow→Row→InternalRow
-    * double conversion a plain `.rdd` hand-off would pay on every row —
-    * the documented BaseRelation fast path for relations whose scan is
-    * itself a Spark plan. */
-  override val needConversion: Boolean = false
-  override def buildScan(): RDD[Row] = {
-    GraftScanAudit.record(GraftScanAudit.ScanAudit(
-      table, m.version, m.files.size, pruned.size, pruned.map(_.path)))
-    val df = MergeTable.readManifest(ctx.sparkSession, table,
-      m.copy(files = pruned))
-    val filtered = filters.flatMap(GraftV1Relation.filterToColumn)
-      .foldLeft(df)(_ where _)
-    filtered.select(required.fieldNames.toSeq.map(col): _*)
-      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
-}
-
-object GraftV1Relation {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.sources._
-
-  /** Conservative sources.Filter → Column translation for re-applying a
-    * pushed predicate inside the inner plan. None = shape not
-    * translated (the outer residual filter alone handles it). The
-    * translated predicate must be EXACTLY equivalent to the original —
-    * under-filtering is caught by the outer residual, but
-    * over-filtering would drop rows, so anything subtle (EqualNullSafe
-    * null-matching, Not over an untranslated child) stays untranslated. */
-  private[graft] def filterToColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) if vs != null && vs.nonEmpty =>
-      Some(col(a).isin(vs.toSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case StringStartsWith(a, p) => Some(col(a).startsWith(p))
-    case StringEndsWith(a, p) => Some(col(a).endsWith(p))
-    case StringContains(a, p) => Some(col(a).contains(p))
-    case And(l, r) => for {
-      lc <- filterToColumn(l); rc <- filterToColumn(r)
-    } yield lc && rc
-    case Or(l, r) => for {
-      lc <- filterToColumn(l); rc <- filterToColumn(r)
-    } yield lc || rc
-    case Not(child) => filterToColumn(child).map(!_)
-    case _ => None
-  }
+  override def toBatch(): org.apache.spark.sql.connector.read.Batch =
+    throw new UnsupportedOperationException(
+      s"graft batch reads are planned by graft.plans.GraftScanStrategy: " +
+        "start the session with spark.sql.extensions=" +
+        "graft.functions.GraftExtensions (graft.GraftSession does)")
 }
 
 /** Batch CHANGE DATA FEED table:

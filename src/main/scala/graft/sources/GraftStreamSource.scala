@@ -35,8 +35,8 @@ private[sources] case class GraftResetOffset(version: Long, files: Long)
   * DATA FEED as a first-class source, with COMMIT VERSIONS as offsets.
   *
   * Integration point: the V1 [[Source]] API behind
-  * [[org.apache.spark.sql.sources.StreamSourceProvider]], the same
-  * choice the batch scan made with `V1Scan` and for the same reason —
+  * [[org.apache.spark.sql.sources.StreamSourceProvider]], for the same
+  * reason the batch scan is planned as the engine's own read —
   * `getBatch` returns the ENGINE'S OWN DataFrame plan (the file-scoped
   * version diff with deletion-vector masking, column mapping and
   * whole-stage codegen intact), where a V2 `MicroBatchStream` would

@@ -74,6 +74,12 @@ object Bridge {
       .GraftCollectBridge.collectTopK(expression(c), num, reverse)
       .toAggregateExpression())
 
+  /** `schema` with every field nullable, recursively — what Spark's own
+    * file reads scan with (`StructType.asNullable` is `private[spark]`):
+    * a file written before a column was added reads that column as null. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   def unpersistLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed.collectLeaves().foreach {

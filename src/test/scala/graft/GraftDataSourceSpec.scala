@@ -914,14 +914,19 @@ class GraftDataSourceSpec extends AnyFunSuite {
     parity(col("payload").startsWith("p1") && col("payload").endsWith("3"))
     // translation unit checks: shapes that must NOT translate stay None
     import org.apache.spark.sql.sources._
-    assert(graft.sources.GraftV1Relation.filterToColumn(
-      AlwaysTrue()).isEmpty)
-    assert(graft.sources.GraftV1Relation.filterToColumn(
-      Not(AlwaysTrue())).isEmpty, "Not over untranslated child stays None")
-    assert(graft.sources.GraftV1Relation.filterToColumn(
-      And(EqualTo("a", 1), AlwaysTrue())).isEmpty)
-    assert(graft.sources.GraftV1Relation.filterToColumn(
-      EqualTo("a", 1)).nonEmpty)
+    val a = org.apache.spark.sql.catalyst.expressions.AttributeReference(
+      "a", org.apache.spark.sql.types.IntegerType)()
+    def tr(f: Filter) = graft.plans.GraftScanStrategy.toPredicate(
+      f, n => Some(a).filter(_.name == n))
+    assert(tr(AlwaysTrue()).isEmpty)
+    assert(tr(Not(AlwaysTrue())).isEmpty,
+      "Not over untranslated child stays None")
+    assert(tr(And(EqualTo("a", 1), AlwaysTrue())).isEmpty)
+    assert(tr(EqualTo("a", 1)).nonEmpty)
+    // a value of another type, or a name that resolves to no column,
+    // stays untranslated rather than guessed at
+    assert(tr(EqualTo("a", 1L)).isEmpty)
+    assert(tr(EqualTo("b", 1)).isEmpty)
   }
 
   test("the scan reports manifest-derived statistics: a small graft " +
@@ -997,6 +1002,102 @@ class GraftDataSourceSpec extends AnyFunSuite {
     // composes with ordinary SQL (v1 + the two contract commits)
     assert(spark.sql(
       s"SELECT max(version) FROM graft_history('$t')").as[Long].head() == 3L)
+  }
+
+  /** Spark jobs started while `df` is built and its physical plan is made
+    * (the jobs of this thread's job group; a marker job behind them
+    * flushes the listener queue, which delivers job starts in order). */
+  private def jobsWhilePlanning(df: => org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"plan-probe-${java.util.UUID.randomUUID()}"
+    val planned = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => planned.incrementAndGet()
+          case Some(g) if g == group + "-end" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "plan probe")
+      df.queryExecution.executedPlan
+      sc.setJobGroup(group + "-end", "plan probe marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      planned.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("planning a graft read runs no Spark job") {
+    // more files than parallelPartitionDiscoveryThreshold (32): listing
+    // them as paths would be a parallel listing job
+    val wide = freshTable("planjobs")
+    MergeTable.mergeUpsert(spark, wide,
+      (1L to 1000L).map(i => (i, i * 1.5)).toDF("event_id", "value"),
+      Seq("event_id"), Seq("event_id"), targetRowsPerFile = 20)
+    val files = MergeTable.latestManifest(wide).get.files.size
+    assert(files > 32, s"want more than 32 files, got $files")
+    assert(jobsWhilePlanning(spark.read.format("graft").load(wide)) == 0)
+    assert(spark.read.format("graft").load(wide).count() == 1000L)
+    // deletion vectors: the masked files' DV datasets are read with their
+    // declared schema (no footer inference job)
+    val dv = seeded("planjobsdv")
+    MergeTable.mergeDelete(spark, dv, (1L to 1000L by 97).toDF("event_id"),
+      deletionVectors = true)
+    assert(MergeTable.latestManifest(dv).get.files.exists(_.dv.nonEmpty))
+    def masked = spark.read.format("graft").load(dv).where(col("value") > 30.0)
+    assert(jobsWhilePlanning(masked) == 0)
+    assert(jobsWhilePlanning(MergeTable.read(spark, dv)) == 0)
+    assert(masked.count() == MergeTable.read(spark, dv)
+      .where(col("value") > 30.0).count())
+    // the scan is planned inline: no nested query behind a row scan
+    val p = masked.queryExecution.executedPlan.toString
+    assert(p.contains("FileScan parquet") &&
+      !p.contains("RowDataSourceScan"), p)
+  }
+
+  test("a nested field read through the scan prunes the struct and reads " +
+    "the field it names") {
+    val t = freshTable("nested")
+    val df = (1L to 50L).map(i => (i, (i * 2L, s"n$i", i * 0.5)))
+      .toDF("event_id", "s")
+      .select(col("event_id"),
+        struct(col("s._1").as("a"), col("s._2").as("b"), col("s._3").as("c")).as("s"))
+    MergeTable.mergeUpsert(spark, t, df, Seq("event_id"), Seq("event_id"))
+    val q = spark.read.format("graft").load(t)
+      .where(col("event_id") > 40L).select(col("event_id"), col("s.c"))
+    assert(q.orderBy("event_id").as[(Long, Double)].collect().toSeq ==
+      (41L to 50L).map(i => (i, i * 0.5)))
+    val scan = q.queryExecution.executedPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.requiredSchema
+    }
+    assert(scan.map(_.simpleString) == Seq("struct<event_id:bigint,s:struct<c:double>>"), scan)
+  }
+
+  test("a legacy manifest entry without a recorded size reads every row") {
+    val t = seeded("legacybytes")
+    val log = java.nio.file.Paths.get(t, "_graft_log")
+    val v0 = log.resolve("v" + "0" * 20 + ".json")
+    val rec = new String(Files.readAllBytes(v0), "UTF-8")
+    assert(rec.contains("\"bytes\":"))
+    // manifests written before sizes were recorded parse bytes = 0
+    Files.write(v0, rec.replaceAll("\"bytes\":\\d+", "\"bytes\":0")
+      .getBytes("UTF-8"))
+    MergeTable.evictCachedManifest(t)
+    assert(MergeTable.latestManifest(t).get.files.forall(_.bytes == 0L))
+    // (a bare count would answer from the manifest without a scan)
+    assert(spark.read.format("graft").load(t).select("value")
+      .collect().length == 1000)
+    assert(MergeTable.read(spark, t).where(col("value") > 0.0).count() == 1000L)
+    assert(spark.read.format("graft").load(t)
+      .where(col("value") > 1400.0).count() == 67L)
   }
 
   private val Row = org.apache.spark.sql.Row

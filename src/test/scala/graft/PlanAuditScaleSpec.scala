@@ -110,6 +110,19 @@ class PlanAuditScaleSpec extends AnyFunSuite {
     auditMapSideAssign("coarseCells", SimilarityOps.coarseCells(spark, dir), "nearest_cosine")
   }
 
+  test("sf0.1 embedding scans: the array<double> widening runs in the scan's codegen stage") {
+    // SimilarityOps.emb widens with an element-wise cast; the retired
+    // transform(x -> cast(x as double)) lambda left this Project uncompiled
+    val p = Dev.finalPlan(SimilarityOps.coarseCells(spark, dir))
+    val lines = p.split("\n")
+    val scan = lines.indexWhere(l => l.contains("FileScan parquet") && l.contains("embedding"))
+    assert(scan > 0, p)
+    // the projection that makes `vec` from the scanned `embedding`
+    val widen = lines.take(scan).lastIndexWhere(_.contains(" AS vec#"))
+    assert(widen >= 0, p)
+    assert(lines.slice(widen, scan).forall("\\*\\(\\d+\\) ".r.findFirstIn(_).nonEmpty), p)
+  }
+
   test("sf0.1 PQ codes encode: map-side kernel, no window, no sort") {
     // the codes build was a join on j into a (vec_id, j) row_number window
     auditMapSideAssign("pqEncode", SimilarityOps.pqEncode(spark, dir), "nearest_l2")

@@ -448,6 +448,34 @@ class PlanAuditSpec extends AnyFunSuite {
     assertNoPresentationSort(p)
   }
 
+  test("q_dsv2_read: the graft scan plans inline as a parquet FileScan, " +
+    "its filters pushed, in the filter's codegen stage") {
+    val df = SparkEntry.queries("q_dsv2_read")(spark, dir)
+    val p = Dev.finalPlan(df)
+    assert(!p.contains("RowDataSourceScan"), p)
+    val lines = p.split("\n")
+    val scans = lines.indices.filter(i => lines(i).contains("FileScan parquet"))
+    assert(scans.nonEmpty, p)
+    scans.foreach { i =>
+      assert(lines(i).contains(
+        "PushedFilters: [IsNotNull(value), GreaterThanOrEqual(value,300.0)]"), p)
+      // every operator from the scan up to its Filter is one codegen stage
+      val above = lines.take(i).reverse
+      val upTo = above.indexWhere(_.contains(" Filter ("))
+      assert(upTo >= 0, p)
+      val stages = above.take(upTo + 1).map(l =>
+        "\\*\\((\\d+)\\)".r.findFirstMatchIn(l).map(_.group(1)))
+      assert(stages.forall(_.nonEmpty) && stages.distinct.size == 1, p)
+    }
+    // the optimized plan keeps the scan relation and its description
+    val described = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan.description()
+    }
+    assert(described.exists(_.matches("GraftScan \\S+ v\\d+ files=\\d+/\\d+ .*")),
+      described)
+  }
+
   test("hard negatives: one hash exchange total (single conditional aggregate)") {
     val df = graft.ops.SimilarityOps.hardNegatives(spark, dir)
     df.collect()

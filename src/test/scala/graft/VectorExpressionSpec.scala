@@ -71,6 +71,28 @@ class VectorExpressionSpec extends AnyFunSuite {
     assert(n == 0)
   }
 
+  test("embedding widening: the element-wise cast equals the lambda cast bit for bit") {
+    // SimilarityOps.emb widens with cast("array<double>"), which stays in
+    // codegen; the retired lambda form is the reference
+    val odd: Seq[Option[Seq[java.lang.Float]]] = Seq(
+      Some(Seq(0.1f, null, -0.0f, Float.NaN, Float.MaxValue,
+        Float.MinPositiveValue, Float.NegativeInfinity)),
+      None, Some(Seq.empty), Some(Seq(null, null)))
+    val rnd = new scala.util.Random(7)
+    val dense = Seq.fill(200)(Some(Seq.fill(SimilarityOps.Dim)(
+      java.lang.Float.valueOf(rnd.nextGaussian().toFloat))))
+    val got = (odd ++ dense).toDF("embedding").select(
+      transform($"embedding", x => x.cast("double")).as("lambda"),
+      $"embedding".cast("array<double>").as("cast")).collect()
+    assert(got.length == odd.size + dense.size)
+    def bits(r: org.apache.spark.sql.Row, i: Int): Option[Seq[Option[Long]]] =
+      Option(r.getSeq[java.lang.Double](i)).map(_.map(d =>
+        Option(d).map(x => java.lang.Double.doubleToRawLongBits(x))))
+    got.foreach(r => assert(bits(r, 0) == bits(r, 1), r))
+    assert(got.count(_.isNullAt(1)) == 1)
+    assert(got.head.getSeq[java.lang.Double](1).count(_ == null) == 1)
+  }
+
   test("interpreted eval path matches codegen (null-safe too)") {
     // force interpreted evaluation through the expression's eval()
     val expr = graft.functions.CosineSimilarity(
