@@ -3,11 +3,14 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 /** Session extensions: registers the engine's native expressions for SQL
   * users (`SELECT cosine_sim(a, b)`) and the custom-plan-tier strategies
   * ([[graft.plans.RangeJoinStrategy]], and [[graft.plans.GraftScanStrategy]],
-  * which plans every graft batch read). Install via
+  * which plans every graft batch read) and the lookup rule
+  * ([[graft.plans.ParameterizeLookups]]). Install via
   * `SparkSession.builder.withExtensions(new GraftExtensions)` — done by
   * [[graft.GraftSession]] — or
   * `spark.sql.extensions=graft.functions.GraftExtensions` on a cluster.
@@ -19,6 +22,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (GraftScan has no batch reader of its own)
     e.injectPlannerStrategy(graft.plans.GraftScanStrategy(_))
     e.injectOptimizerRule(_ => graft.plans.NativeKernelRule)
+    // a lookup's filter literals become references, so point reads of
+    // one shape share one compiled whole-stage class
+    e.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.ParameterizeLookups
+    })
     // OPTIMIZE / VACUUM graft.`/path` — grammar Spark doesn't have,
     // added by a delegating parser (everything else parses verbatim)
     e.injectParser((_, delegate) => new graft.ops.GraftSqlParser(delegate))

@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.time.Duration
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,6 +76,12 @@ object WeatherModel {
   // declarative `[anchor, anchor+24h)` bound (SURVEY §7 "row-order
   // dependence").
 
+  /** The anchor as a timestamp in the session time zone, as the SQL
+    * `TIMESTAMP '<anchor>'` of the `*Sql` fragments reads it. Built without
+    * the SQL parser; with a `Duration` added or subtracted, the optimizer
+    * folds it to the same timestamp literal the SQL form folds to. */
+  private def at(anchor: String): Column = lit(anchor).cast("timestamp")
+
   def isHist: Column = col("data_source") === Historical
   def isFcst: Column = col("data_source") === Forecast
 
@@ -82,20 +90,20 @@ object WeatherModel {
     */
   def hist2d(anchor: String = Anchor): Column =
     isHist &&
-      col("timestamp_utc") >= expr(s"TIMESTAMP '$anchor' - INTERVAL 2 DAYS") &&
-      col("timestamp_utc") < lit(anchor).cast("timestamp")
+      col("timestamp_utc") >= at(anchor) - lit(Duration.ofDays(2)) &&
+      col("timestamp_utc") < at(anchor)
 
   /** First 24 h of the forecast horizon (P9/W1, `classifier.py:30`). */
   def fcst24(anchor: String = Anchor): Column =
     isFcst &&
-      col("timestamp_utc") >= lit(anchor).cast("timestamp") &&
-      col("timestamp_utc") < expr(s"TIMESTAMP '$anchor' + INTERVAL 24 HOURS")
+      col("timestamp_utc") >= at(anchor) &&
+      col("timestamp_utc") < at(anchor) + lit(Duration.ofHours(24))
 
   /** Full 48 h forecast horizon (W2, `api.py:133,139`). */
   def fcst48(anchor: String = Anchor): Column =
     isFcst &&
-      col("timestamp_utc") >= lit(anchor).cast("timestamp") &&
-      col("timestamp_utc") < expr(s"TIMESTAMP '$anchor' + INTERVAL 48 HOURS")
+      col("timestamp_utc") >= at(anchor) &&
+      col("timestamp_utc") < at(anchor) + lit(Duration.ofHours(48))
 
   /** SQL fragments mirroring the predicates above, for oracle queries. */
   def hist2dSql(anchor: String = Anchor): String =

@@ -1,5 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -89,13 +93,28 @@ object Tables {
   private val tsKindCache = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
 
   /** True iff `<dir>/events.parquet` stores ts as TIMESTAMP(NANOS) (which a
-    * nanosAsLong session surfaces as LongType). Footer-only read, memoized by
-    * file identity (size+mtime) so a regenerated events.parquet within one
-    * JVM lifetime re-probes instead of serving a stale encoding.
+    * nanosAsLong session surfaces as LongType). Reads one data file's footer
+    * on the driver (the file itself, or the first part file of a directory)
+    * and runs no Spark job. Memoized by file identity (size+mtime) so a
+    * regenerated events.parquet within one JVM lifetime re-probes instead
+    * of serving a stale encoding.
     */
   def eventsTsIsNanos(spark: SparkSession, sfDir: String): Boolean =
-    tsKindCache.computeIfAbsent(fileIdent(sfDir, "events"), _ =>
-      spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType == LongType)
+    tsKindCache.computeIfAbsent(fileIdent(sfDir, "events"), _ => {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val path = new Path(s"$sfDir/events.parquet")
+      val fs = path.getFileSystem(conf)
+      val file = Some(fs.getFileStatus(path)).filter(_.isFile).getOrElse(
+        fs.listStatus(path).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          .minBy(_.getPath.getName))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+      val schema = try reader.getFileMetaData.getSchema finally reader.close()
+      val ts = schema.getType(schema.getFieldIndex("ts"))
+      ts.getLogicalTypeAnnotation match {
+        case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+        case _ => false
+      }
+    })
 
   val documents: StructType = StructType(Seq(
     StructField("doc_id", LongType),

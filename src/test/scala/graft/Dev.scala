@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +14,8 @@ import graft.sources.Tables
   * Run: sbt "Test/runMain graft.Dev <subcommand> ..."
   *
   *  - `time [filter ...]`: per-sample noop timing of the registered queries
-  *    whose names contain a filter (none = every query);
+  *    whose names contain a filter (none = every query), with the classes
+  *    each sample compiled;
   *  - `ab q21|diff`: two arms of one computation, timed interleaved so
   *    window drift hits both alike;
   *  - `plans <tag> <suffix> [query ...]`: each query's final plan into
@@ -55,11 +57,23 @@ object Dev {
   private def report(label: String, secs: Seq[Double]): Unit =
     println(f"$label%-32s ${secs.map(t => f"$t%7.2f").mkString(" ")}")
 
+  /** Classes compiled in this JVM so far: each is a code-cache miss. */
+  private def compiledClasses: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Per sample: the seconds, then the classes compiled while it ran, so a
+    * plan that compiles anew on every run (a literal in generated code)
+    * shows as a non-zero count after the first sample. */
   private def time(spark: SparkSession, filters: Seq[String]): Unit =
     SparkEntry.queries.keys.toSeq.sorted
       .filter(n => filters.isEmpty || filters.exists(n.contains))
       .foreach { n =>
-        report(n, (1 to reps).map(_ => noopSeconds(SparkEntry.queries(n)(spark, sfDir))))
+        val samples = (1 to reps).map { _ =>
+          val before = compiledClasses
+          val secs = noopSeconds(SparkEntry.queries(n)(spark, sfDir))
+          (secs, compiledClasses - before)
+        }
+        report(n, samples.map(_._1))
+        println(f"${"  classes compiled"}%-32s ${samples.map(s => f"${s._2}%7d").mkString(" ")}")
       }
 
   /** One sample per arm per round, arms alternating within a round. */

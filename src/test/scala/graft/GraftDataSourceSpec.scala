@@ -1004,36 +1004,9 @@ class GraftDataSourceSpec extends AnyFunSuite {
       s"SELECT max(version) FROM graft_history('$t')").as[Long].head() == 3L)
   }
 
-  /** Spark jobs started while `df` is built and its physical plan is made
-    * (the jobs of this thread's job group; a marker job behind them
-    * flushes the listener queue, which delivers job starts in order). */
-  private def jobsWhilePlanning(df: => org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"plan-probe-${java.util.UUID.randomUUID()}"
-    val planned = new java.util.concurrent.atomic.AtomicInteger()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => planned.incrementAndGet()
-          case Some(g) if g == group + "-end" => flushed.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "plan probe")
-      df.queryExecution.executedPlan
-      sc.setJobGroup(group + "-end", "plan probe marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      planned.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Spark jobs started while `df` is built and its physical plan is made. */
+  private def jobsWhilePlanning(df: => org.apache.spark.sql.DataFrame): Int =
+    TestSpark.jobsDuring(df.queryExecution.executedPlan)
 
   test("planning a graft read runs no Spark job") {
     // more files than parallelPartitionDiscoveryThreshold (32): listing
