@@ -18,8 +18,8 @@ import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
-    // graft snapshot scans plan inline as the engine's own parquet read
-    // (GraftScan has no batch reader of its own)
+    // graft batch scans plan inline: snapshot and change-feed reads as
+    // the engine's own parquet reads (no graft scan has a batch reader)
     e.injectPlannerStrategy(graft.plans.GraftScanStrategy(_))
     e.injectOptimizerRule(_ => graft.plans.NativeKernelRule)
     // a lookup's filter literals become references, so point reads of

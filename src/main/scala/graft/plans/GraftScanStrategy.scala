@@ -10,20 +10,23 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, StringType}
 
-import graft.sources.GraftScan
+import graft.sources.GraftInlineScan
 
-/** Plans a graft snapshot scan inline: a Project/Filter chain ending at a
-  * `DataSourceV2ScanRelation` over a [[GraftScan]] is planned as the same
-  * chain over the engine's snapshot read
-  * ([[graft.ops.MergeTable.snapshotPlan]] of the pruned files). Spark's
-  * own file-source planning then sees one Project/Filter chain over a
+/** Plans a graft scan inline: a Project/Filter chain ending at a
+  * `DataSourceV2ScanRelation` over a [[GraftInlineScan]] is planned as the
+  * same chain over the scan's own logical plan. For a snapshot read that
+  * is [[graft.ops.MergeTable.snapshotPlan]] of the pruned files, so
+  * Spark's own file-source planning sees one Project/Filter chain over a
   * parquet relation: the filters reach the parquet reader, the columns
   * are pruned, and scan, filter and projection share one codegen stage.
-  * No nested query is built, and nothing runs a job while planning.
+  * A change-feed read is the union of its separately optimized
+  * per-chunk diffs; a metadata-only aggregate is a local relation of
+  * the driver's rows. No nested query is built, and nothing runs a job
+  * while planning.
   *
-  * The optimized plan keeps the scan relation (its `GraftScan`
-  * description, statistics and pushdown results); only physical planning
-  * sees the snapshot read. Any other plan is declined after a walk of its
+  * The optimized plan keeps the scan relation (its description,
+  * statistics and pushdown results); only physical planning sees the
+  * inlined plan. Any other plan is declined after a walk of its
   * Project/Filter chain. */
 case class GraftScanStrategy(session: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
@@ -31,14 +34,14 @@ case class GraftScanStrategy(session: SparkSession) extends SparkStrategy {
       p match {
         case Project(_, c) => scanOf(c)
         case Filter(_, c) => scanOf(c)
-        case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftScan] =>
+        case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftInlineScan] =>
           Some(r)
         case _ => None
       }
     scanOf(plan).toSeq.map { r =>
-      val snapshot = r.scan.asInstanceOf[GraftScan].snapshotPlan(session, r.output)
+      val scan = r.scan.asInstanceOf[GraftInlineScan].inlinePlan(session, r.output)
       def inline(p: LogicalPlan): LogicalPlan =
-        if (p eq r) snapshot else p.withNewChildren(Seq(inline(p.children.head)))
+        if (p eq r) scan else p.withNewChildren(Seq(inline(p.children.head)))
       planLater(inline(plan))
     }
   }

@@ -174,9 +174,9 @@ private[graft] object GraftChangeFeed {
   /** A batch CDF read is ONE plan unioning one diff per version — a
     * range of tens of thousands of commits would build a planner-hostile
     * tree. The guard is LOUD, never a silent truncation. The batch
-    * `format("graft")` door never hits it: [[GraftCdfRelation]] folds a
-    * wide range into ≤MaxBatchVersions sub-plans stitched at the RDD
-    * level (tunable via `maxVersionsPerRead`). The `graft_changes` TVF
+    * `format("graft")` door never hits it: [[GraftCdfScan]] reads a
+    * wide range as a union of ≤MaxBatchVersions sub-plans, each optimized
+    * on its own (tunable via `maxVersionsPerRead`). The `graft_changes` TVF
     * builds its relation at ANALYSIS time, where only a logical plan can
     * exist — a wide range there redirects to the batch reader or the
     * stream. */
@@ -191,7 +191,8 @@ private[graft] object GraftChangeFeed {
       .map(_.toLong).getOrElse(MaxBatchVersions)
 
   /** The union of per-version frames over [from, to] — the batch CDF
-    * door and the `graft_changes` TVF share this one range walk. */
+    * door (once per chunk) and the `graft_changes` TVF share this one
+    * range walk. */
   def framesFor(spark: SparkSession, shape: FeedShape,
       from: Long, to: Long): DataFrame = {
     val bar = maxBatchVersions(spark)

@@ -4,14 +4,15 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableChange, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -149,9 +150,9 @@ class GraftTableProvider extends TableProvider with DataSourceRegister
           s"readChangeFeed range [$from, $to] is empty or negative")
         require(to <= head.version,
           s"endingVersion $to is beyond the head v${head.version}")
-        // ranges wider than one plan can hold are read in bounded
-        // sub-unions stitched at the RDD level (each chunk is its own
-        // ≤N-version Catalyst plan); the option tunes the chunk width
+        // ranges wider than one plan can hold are read as a union of
+        // bounded sub-plans (each chunk is its own ≤N-version Catalyst
+        // plan, optimized alone); the option tunes the chunk width
         val bar = GraftChangeFeed.maxBatchVersions(SparkSession.active)
         val chunk = k._7.map(_.trim.toLong).getOrElse(bar)
         require(chunk >= 1 && chunk <= bar,
@@ -598,9 +599,32 @@ class GraftScanBuilder(table: String, m: TableManifest, full: StructType)
   }
 }
 
+/** A graft batch scan: [[graft.plans.GraftScanStrategy]] plans its
+  * relation as the logical plan [[inlinePlan]] returns, so the scan has
+  * no batch reader of its own and nothing runs a job while it is planned. */
+trait GraftInlineScan extends Scan {
+
+  /** The scan's rows as a logical plan producing `output` (the scan
+    * relation's attributes). */
+  protected def build(s: SparkSession, output: Seq[Attribute]): LogicalPlan
+
+  final def inlinePlan(s: SparkSession, output: Seq[Attribute]): LogicalPlan =
+    planned.computeIfAbsent(output.map(_.exprId), _ => build(s, output))
+  // AQE re-plans the scan relation each time a stage completes: one plan
+  // per relation output keeps the rebuild out of that loop
+  private val planned =
+    new java.util.concurrent.ConcurrentHashMap[Seq[ExprId], LogicalPlan]()
+
+  override def toBatch(): Batch =
+    throw new UnsupportedOperationException(
+      s"graft batch reads are planned by graft.plans.GraftScanStrategy: " +
+        "start the session with spark.sql.extensions=" +
+        "graft.functions.GraftExtensions (graft.GraftSession does)")
+}
+
 class GraftScan(table: String, m: TableManifest, full: StructType,
     required: StructType, pruneFilters: Array[Filter],
-    allFilters: Array[Filter]) extends Scan
+    allFilters: Array[Filter]) extends GraftInlineScan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
   // two skipping tiers stack: min/max boxes refute ranges, then the
   // opt-in per-file blooms refute equality/IN probes on columns the
@@ -648,23 +672,10 @@ class GraftScan(table: String, m: TableManifest, full: StructType,
     * residual filter above the scan still re-checks every row it
     * returned — double evaluation of a cheap predicate, never a
     * correctness dependence. */
-  private[graft] def snapshotPlan(s: SparkSession,
-      output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    planned.computeIfAbsent(output.map(_.exprId), _ =>
-      MergeTable.snapshotPlan(s, table, full, pruned, m.columnMap,
-        allFilters.toSeq, output))
-  // AQE re-plans the scan relation each time a stage completes: one plan
-  // per relation output keeps the rebuilt file index out of that loop
-  private val planned = new java.util.concurrent.ConcurrentHashMap[
-    Seq[org.apache.spark.sql.catalyst.expressions.ExprId],
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
-
-  override def toBatch(): org.apache.spark.sql.connector.read.Batch =
-    throw new UnsupportedOperationException(
-      s"graft batch reads are planned by graft.plans.GraftScanStrategy: " +
-        "start the session with spark.sql.extensions=" +
-        "graft.functions.GraftExtensions (graft.GraftSession does)")
+  override protected def build(s: SparkSession,
+      output: Seq[Attribute]): LogicalPlan =
+    MergeTable.snapshotPlan(s, table, full, pruned, m.columnMap,
+      allFilters.toSeq, output)
 }
 
 /** Batch CHANGE DATA FEED table:
@@ -752,10 +763,9 @@ class GraftCdfTable(tablePath: String,
       }
       override def pushedFilters(): Array[Filter] = recognized
 
-      /** Column pruning THROUGH the V1 boundary: the inner per-version
-        * plans project to the outer query's required columns, so a
-        * 4-column digest over a wide feed no longer materializes every
-        * payload + preimage column across the RDD hand-off. */
+      /** Column pruning INTO the per-version plans: each one projects
+        * to the outer query's required columns, so a 4-column digest
+        * over a wide feed reads no other payload or preimage column. */
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = requiredSchema
 
@@ -765,49 +775,27 @@ class GraftCdfTable(tablePath: String,
     }
 }
 
+/** The batch change-feed scan over [from, to]. A range wider than
+  * `chunk` versions is read as a union of BOUNDED sub-plans: each chunk
+  * is its own ≤chunk-version union, optimized on its own, so no
+  * optimizer pass ever sees a thousand-way tree; no version is dropped
+  * and each is delivered exactly once. */
 class GraftCdfScan(tablePath: String, shape: GraftChangeFeed.FeedShape,
     from: Long, to: Long, chunk: Long, required: StructType,
-    coalesce: Boolean = false) extends V1Scan {
+    coalesce: Boolean = false) extends GraftInlineScan {
   override def readSchema(): StructType = required
   override def description(): String =
     s"GraftCdfScan $tablePath v$from..v$to " +
       (if (coalesce) "net " else "") +
       s"columns=[${required.fieldNames.mkString(", ")}]"
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftCdfRelation(context, shape, from, to, chunk, required,
-      coalesce).asInstanceOf[T]
-}
 
-/** The batch CDF relation. A range wider than `chunk` versions is read
-  * as BOUNDED SUB-UNIONS stitched at the RDD level: each chunk plans its
-  * own ≤chunk-version union (the Catalyst tree stays bounded no matter
-  * how wide the range), and the chunks concatenate as a plain RDD union
-  * — no thousand-way logical plan, no silent truncation, every version
-  * delivered exactly once. */
-class GraftCdfRelation(ctx: SQLContext, shape: GraftChangeFeed.FeedShape,
-    from: Long, to: Long, chunk: Long, required: StructType,
-    coalesce: Boolean = false)
-    extends BaseRelation with TableScan {
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-  override val needConversion: Boolean = false
-  override def buildScan(): RDD[Row] = {
-    val spark = ctx.sparkSession
-    // a filter-narrowed empty range delivers nothing (never a negative
-    // `to - from` walk)
-    if (to < from)
-      return spark.sparkContext
-        .emptyRDD[org.apache.spark.sql.catalyst.InternalRow]
-        .asInstanceOf[RDD[Row]]
-    // project INSIDE the inner plan — Catalyst prunes the per-version
-    // reads down to the outer query's columns before the RDD hand-off
-    def prune(frame: org.apache.spark.sql.DataFrame): RDD[Row] = {
-      val pruned =
-        if (required.fieldNames.sameElements(shape.schema.fieldNames)) frame
-        else frame.select(required.fieldNames.map(col).toSeq: _*)
-      pruned.queryExecution.toRdd.asInstanceOf[RDD[Row]]
-    }
+  override protected def build(s: SparkSession,
+      output: Seq[Attribute]): LogicalPlan = {
+    // project INSIDE each sub-plan, so the per-version reads are pruned
+    // to the outer query's columns; optimizing it plans and runs nothing
+    def pruned(frame: org.apache.spark.sql.DataFrame): LogicalPlan =
+      frame.select(required.fieldNames.map(col).toSeq: _*)
+        .queryExecution.optimizedPlan
     // coalesceDiffs (same opt-in as the stream door): ONE net diff of
     // the RANGE ENDPOINT snapshots — transient intermediate changes
     // fold away, every row carries _commit_version = `to`. The chunk
@@ -816,19 +804,18 @@ class GraftCdfRelation(ctx: SQLContext, shape: GraftChangeFeed.FeedShape,
     // cross-chunk transients with per-chunk stamps, contradicting the
     // one-net-diff contract. from = 0 (no from-side snapshot) or a
     // vacuumed endpoint falls back to the (chunked) per-version walk.
-    if (coalesce && from > 0) {
-      GraftChangeFeed.rangeChanges(spark, shape, from - 1, to) match {
-        case Some(net) => return prune(net)
-        case None => () // endpoint missing → per-version walk below
-      }
-    }
-    def rddOf(lo: Long, hi: Long): RDD[Row] =
-      prune(GraftChangeFeed.framesFor(spark, shape, lo, hi))
-    if (to - from < chunk) rddOf(from, to)
-    else {
-      val rdds = (from to to by chunk).map(lo =>
-        rddOf(lo, math.min(lo + chunk - 1, to)))
-      spark.sparkContext.union(rdds.toSeq)
+    val net =
+      if (coalesce && from > 0) GraftChangeFeed.rangeChanges(s, shape, from - 1, to)
+      else None
+    val parts = net.map(f => Seq(pruned(f))).getOrElse(
+      (from to to by chunk).map(lo => pruned(
+        GraftChangeFeed.framesFor(s, shape, lo, math.min(lo + chunk - 1, to)))))
+    def aliased(p: LogicalPlan) = Project(p.output.zip(output).map {
+      case (o, w) => Alias(o, w.name)(w.exprId) }, p)
+    parts match {
+      case Seq() => LocalRelation(output) // a filter-narrowed empty range
+      case Seq(p) => aliased(p)
+      case ps => aliased(Union(ps))
     }
   }
 }
@@ -1223,25 +1210,16 @@ private[sources] object ManifestAgg {
   * GROUP BY), zero data files opened (the audit records
   * scannedFiles = 0). */
 class GraftAggScan(table: String, m: TableManifest, out: StructType,
-    rows: Seq[Seq[Any]]) extends V1Scan {
+    rows: Seq[Seq[Any]]) extends GraftInlineScan {
   override def readSchema(): StructType = out
   override def description(): String =
     s"GraftAggScan $table v${m.version} metadata-only rows=${rows.size} " +
       s"[${out.fieldNames.mkString(", ")}]"
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftAggRelation(context, table, m, out, rows).asInstanceOf[T]
-}
-
-class GraftAggRelation(ctx: SQLContext, table: String, m: TableManifest,
-    out: StructType, rows: Seq[Seq[Any]]) extends BaseRelation with TableScan {
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = out
-  override def buildScan(): RDD[Row] = {
+  override protected def build(s: SparkSession,
+      output: Seq[Attribute]): LogicalPlan = {
     GraftScanAudit.record(GraftScanAudit.ScanAudit(
       table, m.version, m.files.size, 0, Seq.empty))
-    ctx.sparkSession.sparkContext.parallelize(
-      rows.map(Row.fromSeq), math.max(1, math.min(rows.size, 32)))
+    LocalRelation.fromExternalRows(output, rows.map(Row.fromSeq))
   }
 }
 

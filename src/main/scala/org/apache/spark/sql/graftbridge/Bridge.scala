@@ -13,12 +13,6 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Release the block-manager storage pinned by a `localCheckpoint()`ed
-    * frame. `Dataset.unpersist` only consults the CacheManager, which does
-    * not track checkpoint RDDs — the pinned blocks live on the internal
-    * RDD inside the checkpoint's `LogicalRDD` leaf, reachable only from
-    * `private[sql]` territory (hence this bridge).
-    */
   /** DataFrame over an arbitrary logical plan — `Dataset.ofRows` went
     * `private[sql]` in the Connect refactor; the SQL front end needs it to
     * materialize a parsed MERGE statement's source plan. */
@@ -41,8 +35,14 @@ object Bridge {
     * streaming `Source.getBatch` contract demands `isStreaming = true`,
     * and the blessed construction (`internalCreateDataFrame` over the
     * plan's InternalRow RDD, exactly what the built-in file source does)
-    * is `private[sql]`. The RDD is lazy: nothing executes until the
-    * micro-batch runs. */
+    * is `private[sql]`. The RDD is not lazy under AQE: `toRdd` on an
+    * adaptive plan runs the diff's shuffle stages at once, inside
+    * `getBatch`. The re-tag stays because the other way to mark the
+    * batch streaming, tagging the diff's leaves, changes what runs:
+    * Spark 4.1's `StreamingJoinStrategy` plans an equi-join whose two
+    * sides are streaming as a stateful `StreamingSymmetricHashJoinExec`,
+    * and the diff's full-outer key join would then need watermarks and
+    * state the feed does not have. */
   def asStreaming(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val c = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
@@ -53,7 +53,10 @@ object Bridge {
   /** Re-tag a STREAMING micro-batch frame as a BATCH DataFrame — the V1
     * `Sink.addBatch` hand-off: the engine's merge runs several actions
     * (dup check, stats pass, write) over the batch, which a streaming-
-    * tagged plan refuses. Same `internalCreateDataFrame` construction as
+    * tagged plan refuses. The re-tag stays because only the micro-batch's
+    * own execution can run its plan: re-planning the frame's logical plan
+    * as a batch would drop the batch id, state and watermarks that
+    * execution binds. Same `internalCreateDataFrame` construction as
     * [[asStreaming]], opposite tag; the caller should pin the result
     * (localCheckpoint) so repeated actions don't recompute the
     * micro-batch source. */
@@ -80,6 +83,12 @@ object Bridge {
   def asNullable(schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = schema.asNullable
 
+  /** Release the block-manager storage pinned by a `localCheckpoint()`ed
+    * frame. `Dataset.unpersist` only consults the CacheManager, which does
+    * not track checkpoint RDDs — the pinned blocks live on the internal
+    * RDD inside the checkpoint's `LogicalRDD` leaf, reachable only from
+    * `private[sql]` territory (hence this bridge).
+    */
   def unpersistLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed.collectLeaves().foreach {

@@ -473,9 +473,11 @@ class GraftStreamSourceSpec extends AnyFunSuite {
     assert(folded == head)
   }
 
-  test("a range wider than the plan-width bar reads batch-wise in bounded " +
-    "RDD-stitched chunks, equal to the streamed replay; the analysis-time " +
-    "TVF redirects; chunk width is capped by the bar") {
+  /** A 50-version table (v0: 20 rows, then 49 single-row commits), for
+    * reads with the plan-width bar scaled DOWN to 20 so the >bar
+    * auto-chunk path runs — the identical code path a 1500-version range
+    * takes at the default bar of 1000, without a 12-minute fixture. */
+  private lazy val fiftyVersions: String = {
     val t = fresh("chunked")
     seed(t) // v0: 20 rows
     // 49 more single-row commits → versions 1..49
@@ -485,12 +487,16 @@ class GraftStreamSourceSpec extends AnyFunSuite {
           .toDF("event_id", "event_type", "value"),
         Seq("event_id"), Seq("event_id"), txn = Some(("w", i.toLong)))
     }
-    // scale the plan-width bar DOWN so the >bar auto-chunk path runs on a
-    // 50-version fixture — the identical code path a 1500-version range
-    // takes at the default bar of 1000, without a 12-minute fixture
+    t
+  }
+
+  test("a range wider than the plan-width bar reads batch-wise in bounded " +
+    "separately optimized chunks, equal to the streamed replay; the " +
+    "analysis-time TVF redirects; chunk width is capped by the bar") {
+    val t = fiftyVersions
     spark.conf.set("spark.graft.cdf.maxBatchVersions", "20")
     try {
-      // 50 versions > bar 20 → 3 sub-plans of ≤20 versions, RDD-stitched
+      // 50 versions > bar 20 → a union of 3 sub-plans of ≤20 versions
       val batch = spark.read.format("graft")
         .option("readChangeFeed", "true")
         .option("startingVersion", "0").load(t).collect().map(key)
@@ -515,6 +521,19 @@ class GraftStreamSourceSpec extends AnyFunSuite {
       val e = intercept[Exception](spark.sql(
         s"SELECT * FROM graft_changes('$t', 0)").collect())
       assert(e.getMessage.contains("maxVersionsPerRead"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.cdf.maxBatchVersions")
+  }
+
+  test("planning a chunked batch change-feed read runs no Spark job and " +
+    "reads every chunk through a parquet FileScan") {
+    spark.conf.set("spark.graft.cdf.maxBatchVersions", "20")
+    try {
+      val df = spark.read.format("graft").option("readChangeFeed", "true")
+        .option("startingVersion", "0").load(fiftyVersions)
+      val jobs = TestSpark.jobsDuring(df.queryExecution.executedPlan)
+      assert(jobs == 0, s"planning the 3-chunk read ran $jobs jobs")
+      val p = Dev.finalPlan(df)
+      assert(p.contains("FileScan parquet") && !p.contains("RowDataSourceScan"), p)
     } finally spark.conf.unset("spark.graft.cdf.maxBatchVersions")
   }
 
@@ -1000,7 +1019,7 @@ class GraftStreamSourceSpec extends AnyFunSuite {
   test("batch CDF pushdown: _commit_version predicates narrow the " +
     "planned version range (one diff plan for an equality, the envelope " +
     "for IN-with-gaps whose residual drops the gap versions) and column " +
-    "pruning reaches INSIDE the V1 boundary") {
+    "pruning reaches INSIDE the per-version plans") {
     import graft.sources.GraftChangeFeed
     val t = fresh("cdfpush")
     seed(t) // v0
@@ -1036,17 +1055,18 @@ class GraftStreamSourceSpec extends AnyFunSuite {
     assert(feed().where(col("_commit_version") === 99L).count() == 0L)
     assert(GraftChangeFeed.planBuildCount.get - b4 == 0L,
       "a version outside the range must plan nothing")
-    // column pruning reaches the inner plans through the V1 boundary:
-    // the physical scan node's OUTPUT is the pruned pair, not the full
-    // feed schema (table + preimages + meta)
+    // column pruning reaches the per-version plans: every branch of the
+    // feed's union OUTPUTS the pruned pair, not the full feed schema
+    // (table + preimages + meta)
     val dfPruned = feed().select("event_id", "_commit_version")
-    val scanOutputs = dfPruned.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.RowDataSourceScanExec =>
-        s.output.map(_.name)
-    }
-    assert(scanOutputs.nonEmpty &&
-      scanOutputs.head == Seq("event_id", "_commit_version"),
-      s"the scan must carry the pruned column set: $scanOutputs")
+    val branchOutputs = new org.apache.spark.sql.execution.adaptive
+        .AdaptiveSparkPlanHelper {}.collect(dfPruned.queryExecution.executedPlan) {
+      case u: org.apache.spark.sql.execution.UnionExec =>
+        u.children.map(_.output.map(_.name))
+    }.flatten
+    assert(branchOutputs.nonEmpty &&
+      branchOutputs.forall(_ == Seq("event_id", "_commit_version")),
+      s"each version's plan must carry the pruned column set: $branchOutputs")
     assert(dfPruned.count() == 24L) // v0 snapshot (20) + four diffs
   }
 

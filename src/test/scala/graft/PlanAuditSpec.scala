@@ -476,6 +476,21 @@ class PlanAuditSpec extends AnyFunSuite {
       described)
   }
 
+  test("change-feed reads plan inline as parquet FileScans; metadata-only " +
+    "aggregates as a local table scan") {
+    Seq("q_cdf_net", "q_cdf_since_ts").foreach { name =>
+      val p = Dev.finalPlan(SparkEntry.queries(name)(spark, dir))
+      assert(p.contains("FileScan parquet"), s"$name:\n$p")
+      assert(!p.contains("GraftCdfRelation") && !p.contains("RowDataSourceScan"),
+        s"$name:\n$p")
+    }
+    SparkEntry.queries.keys.filter(_.startsWith("q_agg_pushdown")).foreach { name =>
+      val p = Dev.finalPlan(SparkEntry.queries(name)(spark, dir))
+      assert(p.contains("LocalTableScan") && !p.contains("GraftAggRelation"),
+        s"$name:\n$p")
+    }
+  }
+
   test("hard negatives: one hash exchange total (single conditional aggregate)") {
     val df = graft.ops.SimilarityOps.hardNegatives(spark, dir)
     df.collect()
@@ -497,6 +512,33 @@ class PlanAuditSpec extends AnyFunSuite {
         if (p.contains("CartesianProduct")) Some(name) else None
     }
     assert(offenders.isEmpty, s"cartesian products in: ${offenders.mkString(", ")}")
+  }
+
+  test("meta-audit: no registered query runs a Spark job while it is planned, " +
+    "and only listed queries run one while their frame is built") {
+    // Building a plan must not run a job. Each frame is built twice so
+    // fixtures and memos are warm; the second build and its physical
+    // planning are counted. A frame whose build runs jobs (eager
+    // checkpoints, driver-side collects) is named here; the list may
+    // only shrink, so an entry whose build no longer runs a job fails too.
+    val buildRunsJobs = Set("q_compact_digest", "q_knn_graph",
+      "q_partitioned_scan", "q_point_lookup", "q_sem_dedup",
+      "q_source_drift", "q_token_budget")
+    val census = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+      q(spark, dir)
+      var df: DataFrame = null
+      val built = TestSpark.jobsDuring { df = q(spark, dir) }
+      val planned = TestSpark.jobsDuring(df.queryExecution.executedPlan)
+      (name, built, planned)
+    }
+    val planning = census.collect { case (n, _, p) if p > 0 => s"$n ($p)" }
+    assert(planning.isEmpty, s"jobs while planning: ${planning.mkString(", ")}")
+    val building = census.collect { case (n, b, _) if b > 0 => n }.toSet
+    assert(building -- buildRunsJobs == Set.empty,
+      s"jobs while building, not listed: ${census.filter(c =>
+        (building -- buildRunsJobs)(c._1)).mkString(", ")}")
+    assert(buildRunsJobs -- building == Set.empty,
+      s"listed but no longer runs a job (drop it): ${buildRunsJobs -- building}")
   }
 
   test("meta-audit: every registered query carries a DuckDB oracle") {
