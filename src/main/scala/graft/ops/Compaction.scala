@@ -49,7 +49,7 @@ object Compaction {
     Compaction.synchronized {
       IndexStore.loadOrBuildDir(
         IndexStore.scopedName("fragmented-events", sfDir),
-        Tables.fileIdent(sfDir, "events")) { tmp =>
+        Tables.fileIdent(s, sfDir, "events")) { tmp =>
         Tables.read(s, sfDir, "events")
           .withColumn("event_date", to_date(col("ts")))
           .repartition(FragmentFactor)

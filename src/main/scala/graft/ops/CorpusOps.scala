@@ -984,7 +984,7 @@ object CorpusOps {
     IndexMemo(dsirTableCache, (s, dir)) {
       val name = graft.ops.IndexStore.scopedName("dsir-logratio", dir)
       val df = graft.ops.IndexStore.loadOrBuild(s, name,
-        s"${Tables.fileIdent(dir, "documents")}|B=$DsirBuckets|tgt=en")(
+        s"${Tables.fileIdent(s, dir, "documents")}|B=$DsirBuckets|tgt=en")(
         dsirLogRatioOf(docs(s, dir)))
       dsirTableFrom(df)
     }

@@ -254,7 +254,7 @@ object DedupOps {
       // the stale-generation sweep deletes same-name siblings, and two
       // thresholds must be two artifacts, not one thrashing slot
       IndexStore.loadOrBuild(s, artifactName(s"neardup-pairs-t$threshold", dir),
-        s"${Tables.fileIdent(dir, "documents")}|k=$MinhashK|b=$LshBands")(
+        s"${Tables.fileIdent(s, dir, "documents")}|k=$MinhashK|b=$LshBands")(
         computeMinhashLsh(s, dir, threshold)))
 
   /** MinHash band-collision CANDIDATE pairs (pre-verification) from a
@@ -388,7 +388,7 @@ object DedupOps {
   def nearDupClusters(s: SparkSession, dir: String): DataFrame =
     IndexMemo(clusterCache, (s, dir))(
       IndexStore.loadOrBuild(s, artifactName("neardup-clusters-cc", dir),
-        Tables.fileIdent(dir, "documents"))(
+        Tables.fileIdent(s, dir, "documents"))(
         computeNearDupClusters(s, dir))
         .orderBy("doc_id"))
 
@@ -485,7 +485,7 @@ object DedupOps {
   def dedupKeepDrop(s: SparkSession, dir: String): DataFrame =
     IndexMemo(keepDropCache, (s, dir))(
       IndexStore.loadOrBuild(s, artifactName("dedup-keepdrop", dir),
-        Tables.fileIdent(dir, "documents"))(computeDedupKeepDrop(s, dir))
+        Tables.fileIdent(s, dir, "documents"))(computeDedupKeepDrop(s, dir))
         .orderBy("doc_id"))
 
   private def computeDedupKeepDrop(s: SparkSession, dir: String): DataFrame = {

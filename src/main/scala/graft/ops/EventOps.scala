@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 import graft.sources.Tables
 
@@ -384,8 +385,8 @@ object EventOps {
     */
   def isProcessedEvent: Column =
     col("event_type") === "error" &&
-      col("ts") >= lit("2024-01-05 00:00:00").cast("timestamp") &&
-      col("ts") < lit("2024-01-06 00:00:00").cast("timestamp")
+      col("ts") >= lit("2024-01-05 00:00:00").cast(TimestampType) &&
+      col("ts") < lit("2024-01-06 00:00:00").cast(TimestampType)
 
   /** The deterministic "already-processed" set: cities with a row where
     * [[isProcessedEvent]] holds.

@@ -74,8 +74,8 @@ object IndexStore {
     * compose over a plain file scan instead of a deep cached lineage);
     * otherwise evaluate `build`, materialize it to parquet, and scan the
     * materialization. `identity` must encode the INPUT FILE IDENTITY
-    * (size+mtime via [[graft.sources.Tables.fileIdent]]) plus every
-    * parameter the artifact depends on — the driver regenerates testdata
+    * (each leaf file's size+mtime, [[graft.sources.Tables.fileIdent]])
+    * plus every parameter the artifact depends on — the driver regenerates testdata
     * between rounds, and a stale artifact must miss, not silently serve.
     *
     * Concurrency: in-process builds are serialized per key by the

@@ -156,7 +156,7 @@ object MultimodalOps {
       import s.implicits._
       IndexStore.loadOrBuild(s,
         IndexStore.scopedName("media-png", dir),
-        Tables.fileIdent(dir, "documents")) {
+        Tables.fileIdent(s, dir, "documents")) {
       Tables.read(s, dir, "documents").select(col("doc_id"))
         .as[Long]
         .mapPartitions(_.map(id => (id, encodePng(id))))
@@ -239,7 +239,7 @@ object MultimodalOps {
       import s.implicits._
       IndexStore.loadOrBuild(s,
         IndexStore.scopedName("media-video", dir),
-        Tables.fileIdent(dir, "documents")) {
+        Tables.fileIdent(s, dir, "documents")) {
       Tables.read(s, dir, "documents").select(col("doc_id"))
         .as[Long]
         .mapPartitions(_.map(id => (id, encodeVideo(id))))
@@ -371,7 +371,7 @@ object MultimodalOps {
       import s.implicits._
       IndexStore.loadOrBuild(s,
         IndexStore.scopedName("media-frameset", dir),
-        Tables.fileIdent(dir, "documents")) {
+        Tables.fileIdent(s, dir, "documents")) {
       Tables.read(s, dir, "documents").select(col("doc_id"))
         .as[Long]
         .mapPartitions(_.flatMap(id => (0 until FramesPerMedia).map(f =>
@@ -585,7 +585,7 @@ object MultimodalOps {
       import s.implicits._
       IndexStore.loadOrBuild(s,
         IndexStore.scopedName("media-audioset", dir),
-        Tables.fileIdent(dir, "documents")) {
+        Tables.fileIdent(s, dir, "documents")) {
       Tables.read(s, dir, "documents").select(col("doc_id"))
         .as[Long]
         .mapPartitions(_.map(id => (id, encodeWav(audiosetSeed(id)))))

@@ -620,7 +620,7 @@ object SimilarityOps {
   private def kmeansTrained(s: SparkSession, dir: String): (DataFrame, Seq[Row]) =
     IndexMemo(centroidCache, (s, dir))(
       trainedArtifact(s, artifactName("ivf-centroids", dir),
-        s"${Tables.fileIdent(dir, "embeddings")}|k=$KmeansK|iters=$KmeansIters$TrainForm",
+        s"${Tables.fileIdent(s, dir, "embeddings")}|k=$KmeansK|iters=$KmeansIters$TrainForm",
         CentroidSchema)(computeKmeansCentroids(s, dir))(centroidRows(_).toSeq))
 
   private[graft] def kmeansCentroids(s: SparkSession, dir: String): DataFrame =
@@ -1367,7 +1367,7 @@ object SimilarityOps {
   private def pqTrained(s: SparkSession, dir: String): (DataFrame, Seq[Row]) =
     IndexMemo(codebookCache, (s, dir))(
       trainedArtifact(s, artifactName("pq-codebooks", dir),
-        s"${Tables.fileIdent(dir, "embeddings")}|m=$PqM|k=$PqK|iters=$PqIters$TrainForm",
+        s"${Tables.fileIdent(s, dir, "embeddings")}|m=$PqM|k=$PqK|iters=$PqIters$TrainForm",
         CodebookSchema)(computePqCodebooks(s, dir))(codebookRows(_).toSeq))
 
   private[graft] def pqCodebooks(s: SparkSession, dir: String): DataFrame =
@@ -1410,7 +1410,7 @@ object SimilarityOps {
   private def pqCodesWide(s: SparkSession, dir: String): DataFrame =
     IndexMemo(codesCache, (s, dir))(
       IndexStore.loadOrBuild(s, artifactName("pq-codes", dir),
-        s"${Tables.fileIdent(dir, "embeddings")}|m=$PqM|k=$PqK|iters=$PqIters$TrainForm")(
+        s"${Tables.fileIdent(s, dir, "embeddings")}|m=$PqM|k=$PqK|iters=$PqIters$TrainForm")(
         pqEncode(s, dir)))
 
   /** The long (vec_id, j, cid) normal form of the codes table, the shape

@@ -56,7 +56,7 @@ object RuleBasedTrailClassifier extends TrailConditionClassifier {
     * forecast horizon. Applied pre-aggregate so it reaches the scan.
     */
   def relevantWindow(anchor: String): Column =
-    (isHist && col("timestamp_utc") < lit(anchor).cast("timestamp")) ||
+    (isHist && col("timestamp_utc") < at(anchor)) ||
       fcst48(anchor)
 
   def relevantWindowSql(anchor: String): String =

@@ -4,6 +4,7 @@ import java.time.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 import graft.sources.Tables
 
@@ -77,10 +78,11 @@ object WeatherModel {
   // dependence").
 
   /** The anchor as a timestamp in the session time zone, as the SQL
-    * `TIMESTAMP '<anchor>'` of the `*Sql` fragments reads it. Built without
-    * the SQL parser; with a `Duration` added or subtracted, the optimizer
-    * folds it to the same timestamp literal the SQL form folds to. */
-  private def at(anchor: String): Column = lit(anchor).cast("timestamp")
+    * `TIMESTAMP '<anchor>'` of the `*Sql` fragments reads it. The cast
+    * takes the `DataType` itself, so building the bound parses no type
+    * string; with a `Duration` added or subtracted, the optimizer folds it
+    * to the same timestamp literal the SQL form folds to. */
+  private[ops] def at(anchor: String): Column = lit(anchor).cast(TimestampType)
 
   def isHist: Column = col("data_source") === Historical
   def isFcst: Column = col("data_source") === Forecast

@@ -1,9 +1,16 @@
 package graft.pipeline
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.ops.{EventOps, RuleBasedTrailClassifier, Sinks, WeatherModel}
+import graft.sources.Tables
 
 /** The reference's three services (SURVEY §3.1–3.3) as batch stage
   * compositions. Queues, outboxes, worker threads, and PEL sweeps all
@@ -16,6 +23,11 @@ import graft.ops.{EventOps, RuleBasedTrailClassifier, Sinks, WeatherModel}
   * build and each AQE query stage runs as its own Spark job:
   * [[pipelineE2E]] scans its facts once and shuffles them once, in 2 jobs
   * per action (traced `trail_batch` in `trailbench/`).
+  *
+  * [[pipelineE2E]] is analysed once per (session, facts directory) while
+  * the facts' file listing and the session's SQL conf stay the same; each
+  * call still optimizes, plans and runs its own query. Nothing else here
+  * keeps state between calls.
   */
 object Pipelines {
 
@@ -113,8 +125,48 @@ object Pipelines {
     * the result stage. Rows come out in no particular order: the label
     * sink is a keyed upsert, and the oracle compare sorts. Plan pinned in
     * PlanAuditSpec, parity with the task-list composition in PipelineSpec.
+    *
+    * Analysed once per (session, `sfDir`): building the frame (the parquet
+    * relation's listing and footer probe, analysis of the projection,
+    * filters and aggregates) held 47 % of a warm pass's driver samples in
+    * a JFR-sampled `trail_batch` run.
+    * The analysed plan is kept with the stamp it was built under: the
+    * Hadoop `FileSystem` listing of `events.parquet` (each leaf file's
+    * name, size and mtime, [[Tables.fileIdent]]) and the session's SQL
+    * conf, compared by value, because analysis fixes the time zone and the
+    * ANSI mode into the plan. A call whose stamp differs rebuilds and
+    * replaces the entry; nothing is keyed by a clock. Every call returns a
+    * new DataFrame with its own `QueryExecution` over the kept plan
+    * (`Bridge.ofAnalysed`), so it optimizes, plans and shuffles anew and
+    * reuses no result. Building the stamp lists files on the driver and
+    * runs no Spark job.
     */
   def pipelineE2E(spark: SparkSession, sfDir: String): DataFrame = {
+    val key = (spark, sfDir)
+    val stamp = (Tables.fileIdent(spark, sfDir, "events"), spark.conf.getAll)
+    val kept = Option(analysedE2E.get(key)).filter(_.stamp == stamp).getOrElse {
+      analysedE2E.keySet.removeIf(_._1.sparkContext.isStopped)
+      val built = Analysed(stamp, buildPipelineE2E(spark, sfDir).queryExecution.analyzed)
+      analysedE2E.put(key, built)
+      built
+    }
+    Bridge.ofAnalysed(spark, kept.plan)
+  }
+
+  /** An analysed [[pipelineE2E]] plan and the stamp it was built under:
+    * the facts' [[Tables.fileIdent]] and the session's SQL conf. */
+  private final case class Analysed(stamp: (String, Map[String, String]), plan: LogicalPlan)
+
+  /** One entry per (session, facts directory); entries of stopped
+    * sessions are dropped when another entry is built. */
+  private val analysedE2E = new ConcurrentHashMap[(SparkSession, String), Analysed]()
+
+  /** Entries [[pipelineE2E]] keeps for `spark`. */
+  private[graft] def analysedEntries(spark: SparkSession): Seq[String] =
+    analysedE2E.keySet.asScala.toSeq.filter(_._1 eq spark).map(_._2)
+
+  /** [[pipelineE2E]]'s frame, built and analysed anew on every call. */
+  private[graft] def buildPipelineE2E(spark: SparkSession, sfDir: String): DataFrame = {
     val facts = WeatherModel
       .weatherRecords(spark, sfDir, EventOps.isProcessedEvent.as("processed"))
       .where(col("city_id").isNotNull && (WeatherModel.isValid || col("processed")))

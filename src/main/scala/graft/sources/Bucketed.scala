@@ -32,7 +32,7 @@ object Bucketed {
     // old artifact directory — the stale catalog entry must simply never
     // be consulted again (new identity → new name → fresh attach)
     def identTag(src: String): String = java.util.UUID
-      .nameUUIDFromBytes(Tables.fileIdent(sfDir, src).getBytes("UTF-8"))
+      .nameUUIDFromBytes(Tables.fileIdent(s, sfDir, src).getBytes("UTF-8"))
       .toString.take(8).replace("-", "")
     val li = s"li_bkt_${dirTag}_${identTag("lineitem")}"
     val ord = s"ord_bkt_${dirTag}_${identTag("orders")}"
@@ -46,7 +46,7 @@ object Bucketed {
       if (!s.catalog.tableExists(table)) {
         val frame = df
         val path = graft.ops.IndexStore.loadOrBuildDir(
-          artifact(artifactKind), Tables.fileIdent(sfDir, src)) { tmp =>
+          artifact(artifactKind), Tables.fileIdent(s, sfDir, src)) { tmp =>
           // write the bucketed files as an EXTERNAL table at the temp
           // path, then drop only the catalog entry — the files stay and
           // loadOrBuildDir's atomic rename publishes them

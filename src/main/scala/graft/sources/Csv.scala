@@ -23,7 +23,7 @@ object Csv {
   def dumpDocuments(s: SparkSession, sfDir: String): String = {
     val tmp = System.getProperty("java.io.tmpdir", "/tmp")
     val out = s"$tmp/graft-csv/${java.util.UUID.nameUUIDFromBytes(
-      Tables.fileIdent(sfDir, "documents").getBytes("UTF-8"))}"
+      Tables.fileIdent(s, sfDir, "documents").getBytes("UTF-8"))}"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out))) {
       graft.ops.IndexStore.recordFixtureBuild("csv-dump")
       val staging = s"$out.tmp-${java.util.UUID.randomUUID()}"

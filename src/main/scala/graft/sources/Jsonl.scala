@@ -45,7 +45,7 @@ object Jsonl {
     // rounds, and has changed the ts encoding before) invalidates the dump
     // instead of silently serving stale rows
     val out = s"$tmp/graft-jsonl/${java.util.UUID.nameUUIDFromBytes(
-      Tables.fileIdent(sfDir, "events").getBytes("UTF-8"))}"
+      Tables.fileIdent(s, sfDir, "events").getBytes("UTF-8"))}"
     // write-to-temp + atomic rename: a concurrent process either sees the
     // complete dump or none — never a half-written/mid-overwrite directory
     // (mode("overwrite") DELETES before writing, so a marker-file

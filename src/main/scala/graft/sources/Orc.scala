@@ -22,7 +22,7 @@ object Orc {
   def dumpDocuments(s: SparkSession, sfDir: String): String = {
     val tmp = System.getProperty("java.io.tmpdir", "/tmp")
     val out = s"$tmp/graft-orc/${java.util.UUID.nameUUIDFromBytes(
-      Tables.fileIdent(sfDir, "documents").getBytes("UTF-8"))}"
+      Tables.fileIdent(s, sfDir, "documents").getBytes("UTF-8"))}"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out))) {
       graft.ops.IndexStore.recordFixtureBuild("orc-dump")
       val staging = s"$out.tmp-${java.util.UUID.randomUUID()}"

@@ -25,7 +25,7 @@ object Partitioned {
     Partitioned.synchronized {
       graft.ops.IndexStore.loadOrBuildDir(
         graft.ops.IndexStore.scopedName("partitioned-events", sfDir),
-        Tables.fileIdent(sfDir, "events")) { tmp =>
+        Tables.fileIdent(s, sfDir, "events")) { tmp =>
         Tables.read(s, sfDir, "events")
           .withColumn("event_date", to_date(col("ts")))
           .repartition(col("event_date"))

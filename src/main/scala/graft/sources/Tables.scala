@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
@@ -95,12 +95,12 @@ object Tables {
   /** True iff `<dir>/events.parquet` stores ts as TIMESTAMP(NANOS) (which a
     * nanosAsLong session surfaces as LongType). Reads one data file's footer
     * on the driver (the file itself, or the first part file of a directory)
-    * and runs no Spark job. Memoized by file identity (size+mtime) so a
-    * regenerated events.parquet within one JVM lifetime re-probes instead
-    * of serving a stale encoding.
+    * and runs no Spark job. Memoized by [[fileIdent]] so a regenerated
+    * events.parquet within one JVM lifetime re-probes instead of serving a
+    * stale encoding.
     */
   def eventsTsIsNanos(spark: SparkSession, sfDir: String): Boolean =
-    tsKindCache.computeIfAbsent(fileIdent(sfDir, "events"), _ => {
+    tsKindCache.computeIfAbsent(fileIdent(spark, sfDir, "events"), _ => {
       val conf = spark.sparkContext.hadoopConfiguration
       val path = new Path(s"$sfDir/events.parquet")
       val fs = path.getFileSystem(conf)
@@ -134,15 +134,28 @@ object Tables {
     "lineitem" -> lineitem, "documents" -> documents,
     "embeddings" -> embeddings)
 
-  /** Identity string for a source parquet (dir + size + mtime) — the cache
-    * key for cross-JVM dump directories (Jsonl/Orc/Csv): a regenerated
-    * source file must invalidate the cached dump, not silently serve stale
-    * rows. (The driver rewrites the testdata between rounds.)
+  /** Identity string for a source parquet: every leaf file under
+    * `<dir>/<name>.parquet` (the file itself, or each part file of a
+    * directory, at any depth) with its size and modification time, as the
+    * Hadoop `FileSystem` of the path lists them, so `file:`, `hdfs:` and
+    * `s3a:` directories work like local paths. The cache key for cross-JVM
+    * dumps and index artifacts (Jsonl/Orc/Csv, [[graft.ops.IndexStore]])
+    * and the stamp of in-JVM memos ([[eventsTsIsNanos]],
+    * [[graft.pipeline.Pipelines.pipelineE2E]]): a regenerated source, a new
+    * part file or a part file rewritten in place must invalidate what was
+    * built from the old files, not silently serve stale rows. A directory's
+    * own size and mtime would not do: rewriting a part file in place
+    * changes neither. Lists on the driver and runs no Spark job.
     */
-  def fileIdent(sfDir: String, name: String): String = {
-    val p = java.nio.file.Paths.get(s"$sfDir/$name.parquet")
-    s"$sfDir/$name:${java.nio.file.Files.size(p)}:" +
-      java.nio.file.Files.getLastModifiedTime(p).toMillis
+  def fileIdent(spark: SparkSession, sfDir: String, name: String): String = {
+    val root = new Path(s"$sfDir/$name.parquet")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefix = fs.makeQualified(root).toString
+    def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap(f =>
+      if (f.isDirectory) leaves(f.getPath) else Seq(f))
+    s"$sfDir/$name" + leaves(root).map { f =>
+      s"${f.getPath.toString.stripPrefix(prefix)}:${f.getLen}:${f.getModificationTime}"
+    }.sorted.mkString
   }
 
   /** Scan one table from a scale-factor directory with its declared schema. */

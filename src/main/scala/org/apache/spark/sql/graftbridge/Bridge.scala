@@ -22,6 +22,25 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A new DataFrame over a kept analysed plan, without analysing it again.
+    * Each call gets its own `QueryExecution` (it optimizes, plans and
+    * executes anew, and shares no result or shuffle output with another
+    * call), over a fresh no-op root: a `Project` of the plan's own output,
+    * marked analysed (`setAnalyzed` is not public), so
+    * `Analyzer.executeAndCheck` returns it as it is, and the optimizer's
+    * `RemoveNoopOperators` drops it. The Dataset's id tag
+    * (`DATASET_ID_TAG`, which the Dataset constructor adds to its root
+    * plan) lands on that root, so the kept plan's tag set does not grow
+    * with the calls. */
+  def ofAnalysed(s: org.apache.spark.sql.SparkSession,
+      analysed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame = {
+    require(analysed.analyzed, "ofAnalysed needs an analysed plan")
+    val root = org.apache.spark.sql.catalyst.plans.logical.Project(analysed.output, analysed)
+    root.setAnalyzed()
+    ofRows(s, root)
+  }
+
   /** Catalyst predicate → data-source [[org.apache.spark.sql.sources.Filter]]
     * (None when the shape has no source-filter equivalent) —
     * `DataSourceStrategy.translateFilter` is `private[sql]`; the SQL

@@ -4,7 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.ops.{ChangeCapture, TextOps}
 import graft.sources.Tables
@@ -231,13 +234,29 @@ object Dev {
     .replaceAll("QueryStage \\d+", "QueryStage")
     .replaceAll("\\*\\(\\d+\\)", "*")
 
+  /** `yes` when a file scan of the executed plan (subqueries and AQE
+    * stages included, cached builds not) has filters pushed into its
+    * reader (its `PushedFilters`: the data filters that translate to
+    * source filters), `-` when none has, and `n/a` when the plan scans no
+    * file, as a metadata-only answer does (a `LocalTableScan` of the
+    * manifest's figures). Read from the scan nodes, not the plan text. */
+  private def pushdown(plan: SparkPlan): String = {
+    val scans = PlanWalk.collectWithSubqueries(plan) { case s: FileSourceScanExec => s }
+    if (scans.isEmpty) "n/a"
+    else if (scans.exists(_.dataFilters.exists(Bridge.translateFilter(_).isDefined))) "yes"
+    else "-"
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
   /** Final plans that differ between two runs of unchanged code at
     * sf0.01 because AQE's own choice varies, and what varies. They are
     * named, never masked: the choice is a real difference in what ran. */
   private val knownFlips = Seq(
     "q_profile_table" -> "grouping-key order",
     "q_sketch_rollup" -> "broadcast side",
-    "q_j3_cogroup_join" -> "build side")
+    "q_j3_cogroup_join" -> "build side",
+    "q_hll_distinct" -> "build side")
 
   private def plans(
       spark: SparkSession, tag: String, suffix: String, only: Seq[String]): Unit = {
@@ -246,13 +265,14 @@ object Dev {
     Files.createDirectories(outDir)
     val rows = names.map { n =>
       val row = try {
-        val p = finalPlan(SparkEntry.queries(n)(spark, sfDir))
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        val p = finalPlan(df)
         Files.writeString(outDir.resolve(s"${n}_$suffix.txt"), stablePlan(p) + "\n")
         val shuffles = "Exchange hashpartitioning".r.findAllIn(p).size
         val broadcasts = "BroadcastExchange".r.findAllIn(p).size
         val sorts = "Sort ".r.findAllIn(p).size
         val codegen = """\*\(\d+\)""".r.findAllIn(p).size
-        val pushed = if (p.contains("PushedFilters: [I")) "yes" else "-"
+        val pushed = pushdown(df.queryExecution.executedPlan)
         s"| $n | $shuffles | $broadcasts | $sorts | $codegen | $pushed |"
       } catch {
         case e: Throwable => s"| $n | ERROR: ${e.getMessage.take(60)} |"
@@ -267,7 +287,8 @@ object Dev {
         s"Generated by `SPARK_GRAFT_SF_DIR=$sfDir sbt \"Test/runMain graft.Dev plans $tag $suffix\"`;",
         s"each row counts the final plan in `plans/$tag/<query>_$suffix.txt`.",
         "Columns: shuffle exchanges, broadcast exchanges, sorts,",
-        "whole-stage-codegen stages, parquet filter pushdown on the scan.",
+        "whole-stage-codegen stages, filters pushed into a file scan (n/a: the",
+        "plan scans no file, as a metadata-only answer does).",
         "",
         "| query | shuffles | broadcasts | sorts | codegen stages | pushdown |",
         "|---|---|---|---|---|---|")

@@ -1,9 +1,17 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.time.{LocalDateTime, ZoneOffset}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanTags
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{EventOps, RuleBasedTrailClassifier, Sinks, WeatherModel}
@@ -67,6 +75,28 @@ class PipelineSpec extends AnyFunSuite {
     RuleBasedTrailClassifier.classify(weather, WeatherModel.Anchor)
   }
 
+  private type Fact = (Long, String, Option[Long], String, Option[Double])
+
+  /** Writes `rows` (event_id, ts, user_id, event_type, value) as one part
+    * file under `<sfDir>/events.parquet`, added to those already there. `ts`
+    * is read in the session time zone and stored as TIMESTAMP(MICROS). */
+  private def writeEvents(sfDir: String, rows: Seq[Fact]): Unit = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    try {
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+        .select(col("event_id"), col("ts").cast("timestamp").as("ts"), col("user_id"),
+          col("event_type"), col("value"), lit(null).cast("string").as("props"))
+        .coalesce(1).write.mode("append").parquet(s"$sfDir/events.parquet")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  // the outputs carry no row order: compare them sorted by city_id,
+  // nulls first as in an ascending orderBy
+  private def byCity(df: DataFrame) =
+    df.collect().toSeq.sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+
   test("pipeline e2e equals the task-list form on null, processed and invalid rows") {
     // value < 0 or null is invalid. City 1 is processed (an error event on
     // 2024-01-05); city 2 has only invalid rows; city 3 has one invalid
@@ -94,24 +124,121 @@ class PipelineSpec extends AnyFunSuite {
       (17, "2024-01-05 12:00:00", Some(6L), "error", Some(-20.0)),
       (18, "2024-01-05 12:00:00", Some(7L), "error", Some(10.0)))
     val sfDir = Files.createTempDirectory("graft_e2e_edges").toString
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try {
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-        .select(col("event_id"), col("ts").cast("timestamp").as("ts"), col("user_id"),
-          col("event_type"), col("value"), lit(null).cast("string").as("props"))
-        .coalesce(1).write.parquet(s"$sfDir/events.parquet")
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-
-    // the outputs carry no row order: compare them sorted by city_id,
-    // nulls first as in an ascending orderBy
-    def byCity(df: DataFrame) =
-      df.collect().toSeq.sortBy(r => if (r.isNullAt(0)) Long.MinValue else r.getLong(0))
+    writeEvents(sfDir, rows)
     val got = byCity(Pipelines.pipelineE2E(spark, sfDir))
     assert(got == byCity(taskListPipelineE2E(sfDir)))
     assert(!got.exists(_.isNullAt(0)), got)
     assert(got.map(_.getLong(0)) == Seq(3L, 4L), got)
+  }
+
+  // ---- pipelineE2E keeps its analysed plan per (session, directory) --------
+
+  /** City 1's facts: three cold rainy hours in the 2 days before the anchor
+    * (6 mm, no warm day: TRAIL_MUD_WARNING) and one older row that keeps
+    * the city in the window wherever the anchor falls. */
+  private val mudCity: Seq[Fact] = Seq(
+    (1, "2024-01-10 12:00:00", Some(1L), "click", Some(40.0)),
+    (2, "2024-01-19 20:00:00", Some(1L), "click", Some(50.0)),
+    (3, "2024-01-19 21:00:00", Some(1L), "view", Some(50.0)),
+    (4, "2024-01-19 22:00:00", Some(1L), "purchase", Some(50.0)))
+
+  private def factsDir(rows: Seq[Fact]): String = {
+    val sfDir = Files.createTempDirectory("graft_e2e_memo").toString
+    writeEvents(sfDir, rows)
+    sfDir
+  }
+
+  /** The second call sees what changed: its rows equal a fresh build's,
+    * and differ from the first call's. */
+  private def assertSeesChange(sfDir: String)(change: => Unit): Unit = {
+    val first = byCity(Pipelines.pipelineE2E(spark, sfDir))
+    change
+    val second = byCity(Pipelines.pipelineE2E(spark, sfDir))
+    assert(second == byCity(Pipelines.buildPipelineE2E(spark, sfDir)))
+    assert(second != first, second)
+  }
+
+  test("pipeline e2e memo: a fact file added between two calls shows in the second") {
+    val sfDir = factsDir(mudCity)
+    assertSeesChange(sfDir) {
+      writeEvents(sfDir, Seq((5, "2024-01-19 10:00:00", Some(2L), "click", Some(20.0))))
+    }
+    assert(byCity(Pipelines.pipelineE2E(spark, sfDir)).map(_.getLong(0)) == Seq(1L, 2L))
+  }
+
+  /** `rows` in one parquet file written by parquet-mr with `ts` as
+    * TIMESTAMP(NANOS), the other encoding `events` has shipped in (UTC). */
+  private def nanosEventsFile(rows: Seq[Fact]): java.nio.file.Path = {
+    val file = Files.createTempDirectory("graft_e2e_nanos").resolve("events.parquet")
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required double value;
+        |}""".stripMargin)
+    val writer = ExampleParquetWriter.builder(new HPath(file.toString))
+      .withType(schema).build()
+    val group = new SimpleGroupFactory(schema)
+    try rows.foreach { case (id, ts, city, kind, value) =>
+      val nanos = LocalDateTime.parse(ts.replace(' ', 'T')).toEpochSecond(ZoneOffset.UTC) *
+        1000000000L
+      writer.write(group.newGroup().append("event_id", id).append("ts", nanos)
+        .append("user_id", city.get).append("event_type", kind).append("value", value.get))
+    } finally writer.close()
+    file
+  }
+
+  test("pipeline e2e memo: a part file rewritten in place shows in the second call") {
+    val sfDir = factsDir(mudCity)
+    val target = Files.list(Paths.get(sfDir, "events.parquet")).iterator().asScala
+      .find(p => p.getFileName.toString.matches("part-.*\\.parquet")).get
+    // the same name, new bytes: the city's hours dry, and ts stored as
+    // TIMESTAMP(NANOS), which the analysed plan's scan schema depends on
+    val dry = nanosEventsFile(
+      mudCity.map { case (id, ts, city, kind, _) => (id, ts, city, kind, Some(10.0)) })
+    assertSeesChange(sfDir) {
+      Files.write(target, Files.readAllBytes(dry))
+      Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc"))
+    }
+  }
+
+  test("pipeline e2e memo: a session time zone change shows in the second call") {
+    // east of UTC the anchor falls before the rainy hours, so they leave
+    // the 2-day window and the label turns from mud to dry
+    val sfDir = factsDir(mudCity)
+    val key = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(key)
+    try assertSeesChange(sfDir)(spark.conf.set(key, "Asia/Tokyo"))
+    finally spark.conf.set(key, prev)
+  }
+
+  test("pipeline e2e memo: calls on an unchanged directory share one analysed plan, " +
+    "each in its own query, and building the frame runs no job") {
+    val sfDir = factsDir(mudCity)
+    var a: DataFrame = null
+    assert(TestSpark.jobsDuring { a = Pipelines.pipelineE2E(spark, sfDir) } == 0)
+    val kept = a.queryExecution.analyzed.children.head
+    val tags = PlanTags.datasetIds(kept)
+    var b: DataFrame = null
+    assert(TestSpark.jobsDuring { b = Pipelines.pipelineE2E(spark, sfDir) } == 0)
+    assert(a.queryExecution ne b.queryExecution)
+    assert(b.queryExecution.analyzed.children.head eq kept)
+    (1 to 3).foreach(_ => Pipelines.pipelineE2E(spark, sfDir).collect())
+    assert(byCity(b) == byCity(Pipelines.buildPipelineE2E(spark, sfDir)))
+    // each call's Dataset id lands on its own root, not on the kept plan
+    assert(PlanTags.datasetIds(kept) == tags)
+    // the final plan is the un-memoised frame's: the no-op root is gone
+    assert(b.queryExecution.optimizedPlan.canonicalized ==
+      Pipelines.buildPipelineE2E(spark, sfDir).queryExecution.optimizedPlan.canonicalized)
+    // a changed listing replaces the entry
+    (6 to 8).foreach { i =>
+      writeEvents(sfDir, Seq((i.toLong, "2024-01-19 10:00:00", Some(i.toLong), "click",
+        Some(20.0))))
+      Pipelines.pipelineE2E(spark, sfDir)
+    }
+    assert(Pipelines.analysedEntries(spark).count(_ == sfDir) == 1)
   }
 
   test("A10: observe() counters report flushed rows without breaking the plan") {

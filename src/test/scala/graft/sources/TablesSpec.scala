@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -15,7 +17,8 @@ import graft.TestSpark
 /** [[Tables.eventsTsIsNanos]] reads one footer on the driver: it runs no
   * Spark job, and the events schema it picks reads `ts` right whether the
   * column is TIMESTAMP(NANOS) or TIMESTAMP(MICROS), in one file or in a
-  * directory of part files. */
+  * directory of part files. [[Tables.fileIdent]], the stamp of that probe's
+  * memo, lists the leaf files through the path's Hadoop `FileSystem`. */
 class TablesSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
@@ -75,5 +78,32 @@ class TablesSpec extends AnyFunSuite {
       assert(ev.orderBy("event_id").select(unix_seconds(col("ts"))).as[Long].collect().toSeq ==
         epochSeconds, dir)
     }
+  }
+
+  test("fileIdent lists leaf files through the path's FileSystem: a file: URI " +
+    "directory reads events, and a part file rewritten in place changes the ident") {
+    val dir = eventsDirectory()
+    val uri = s"file://$dir"
+    val ev = Tables.read(spark, uri, "events")
+    assert(ev.orderBy("event_id").select(unix_seconds(col("ts"))).as[Long].collect().toSeq ==
+      epochSeconds)
+
+    val events = java.nio.file.Paths.get(dir, "events.parquet")
+    val part = Files.list(events).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val before = Tables.fileIdent(spark, dir, "events")
+    assert(Tables.fileIdent(spark, uri, "events").stripPrefix(uri) == before.stripPrefix(dir))
+    val dirStamp = (Files.size(events), Files.getLastModifiedTime(events))
+    // an append in place: the directory entry's size and mtime stay put
+    Files.write(part, Array[Byte](0), java.nio.file.StandardOpenOption.APPEND)
+    assert((Files.size(events), Files.getLastModifiedTime(events)) == dirStamp)
+    assert(Tables.fileIdent(spark, dir, "events") != before)
+  }
+
+  test("fileIdent of a single file keeps its <dir>/<name>:<size>:<mtime> form") {
+    val dir = eventsFile("MICROS")
+    val f = java.nio.file.Paths.get(dir, "events.parquet")
+    assert(Tables.fileIdent(spark, dir, "events") ==
+      s"$dir/events:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}")
   }
 }
